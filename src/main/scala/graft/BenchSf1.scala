@@ -232,7 +232,7 @@ object BenchSf1 {
       // r18 (r17 verdict item 6): the fraud, relational and search
       // headliners' first sf1 evidence — composite-z scoring over the
       // replicated catalog (f04) and the full text-extraction scorer
-      // against the reference stats file (f12), the co-purchase pair
+      // against the pinned stats (f12), the co-purchase pair
       // mining with its adaptive catalog prune (q20), sessionized
       // top paths over 10x users (q28), BM25 scoring (s06; its
       // served-index sibling s15 is already above), graph risk

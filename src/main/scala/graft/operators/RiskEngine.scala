@@ -261,20 +261,20 @@ object RiskEngine {
     scoreItemsResolved(prepared, segs, comps, passthrough = Seq("corrected"))
   }
 
-  /** Stats-file location for the driver faces: overridable via
-    * GRAFT_STATS_JSON; the reference checkout's file is only the
-    * default for this environment, not a library-level constant. */
-  def defaultStatsPath: String =
-    sys.env.getOrElse("GRAFT_STATS_JSON", "/root/reference/market_stats.json")
-
   /** Driver query face (rows-only): synthesize a listing-shaped item
-    * table from `part` (same construction as f11) and score it with
-    * the reference's own market-stats file. Exact semantics are pinned
-    * by RiskFidelitySpec. The factors array is '|'-joined for the
-    * driver harness (pandas cannot sort array cells); the library API
+    * table from `part` (same construction as f11) and score it through
+    * the full text-extraction path against the pinned stats
+    * (PinnedRawSegs/PinnedRawComps, resolved as for f12b). Those stats
+    * name the categories and components the f12Items titles carry and
+    * are deliberately irregular, so the condition-fallback, stdev-guard
+    * and absent-stats paths all run. The scorer's exact semantics are
+    * pinned by RiskFidelitySpec, which replays the reference against
+    * its own market_stats.json and so runs only where the reference
+    * checkout exists. The factors array is '|'-joined for the driver
+    * harness (pandas cannot sort array cells); the library API
     * (scoreItems) keeps the array form. */
   def f12(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    scoreItems(f12Items(s, dir), defaultStatsPath)
+    scoreItemsResolved(f12Items(s, dir), pinnedSegs, pinnedComps)
       .withColumn("risk_factors", array_join(col("risk_factors"), "|"))
 
   // =================================================================
@@ -288,10 +288,10 @@ object RiskEngine {
   // scoreItems runs (poller.py:333-495).
   // =================================================================
 
-  /** Pinned raw stats for f12b. Deliberately irregular: GAMING/NEW and
-    * APPLE/NEW+LIKE_NEW are absent (exercise the fallback chain),
-    * WORKSTATION has a zero-stdev ram row (exercise the validity
-    * guard), GENERICO is absent entirely (tw=0 path). */
+  /** Pinned raw stats for f12 and f12b. Deliberately irregular:
+    * GAMING/NEW and APPLE/NEW+LIKE_NEW are absent (exercise the
+    * fallback chain), WORKSTATION has a zero-stdev ram row (exercise
+    * the validity guard), GENERICO is absent entirely (tw=0 path). */
   val PinnedRawSegs: Map[(String, String), (Double, Double)] = Map(
     ("GAMING", "USED") -> (1150.0, 260.0),
     ("GAMING", "LIKE_NEW") -> (1380.0, 310.0),
@@ -432,7 +432,7 @@ object RiskEngine {
   // (regex_analyzer.process_data, regex_analyzer.py:849-1022): items →
   // routed segments → per-(category, condition) price stats with
   // nested per-component stats. Output is the flat-row form of the
-  // reference's market_stats.json tree; RiskFidelitySpec replays a
+  // reference's market_stats.json tree; StatsGenFidelitySpec replays a
   // pinned corpus. One shuffle per aggregation level, all
   // combiner-friendly.
   // =================================================================

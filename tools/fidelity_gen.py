@@ -5,11 +5,19 @@ case corpus, and pinning its outputs to a committed JSON file that
 TextSpecsFidelitySpec replays against the Spark implementation.
 
 Regenerate with: python3 tools/fidelity_gen.py
+
+Runs only where the reference checkout exists (the poller package
+under /root/reference); elsewhere it exits with one line naming the
+missing path.
 """
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/reference/poller")
+POLLER = "/root/reference/poller"
+if not os.path.isdir(POLLER):
+    sys.exit(f"fidelity_gen: reference checkout missing: {POLLER} not found")
+sys.path.insert(0, POLLER)
 import regex_analyzer as ra  # noqa: E402
 
 CASES = [

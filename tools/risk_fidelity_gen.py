@@ -6,6 +6,10 @@ NEW-condition fallback (est ×1.2 + z rebase), short-desc and
 external-contact heuristics, and clamping.
 
 Regenerate with: python3 tools/risk_fidelity_gen.py
+
+Runs only where the reference checkout exists (the poller package and
+market_stats.json under /root/reference); elsewhere it exits with one
+line naming the missing path.
 """
 import json
 import os
@@ -18,8 +22,12 @@ _req = types.ModuleType("requests")
 _req.Response = type("Response", (), {})
 _req.exceptions = types.SimpleNamespace(RequestException=Exception)
 sys.modules.setdefault("requests", _req)
-sys.path.insert(0, "/root/reference/poller")
-os.chdir("/root/reference")  # poller loads market_stats.json from cwd
+REFERENCE = "/root/reference"
+for need in (os.path.join(REFERENCE, "poller"), os.path.join(REFERENCE, "market_stats.json")):
+    if not os.path.exists(need):
+        sys.exit(f"risk_fidelity_gen: reference checkout missing: {need} not found")
+sys.path.insert(0, os.path.join(REFERENCE, "poller"))
+os.chdir(REFERENCE)  # poller loads market_stats.json from cwd
 import poller  # noqa: E402
 
 CASES = [

@@ -5,12 +5,19 @@ flattening the produced market_stats.json tree into rows that
 StatsGenFidelitySpec replays against RiskEngine.generateMarketStats.
 
 Regenerate with: python3 tools/stats_fidelity_gen.py
+
+Runs only where the reference checkout exists (the poller package
+under /root/reference); elsewhere it exits with one line naming the
+missing path.
 """
 import json
 import os
 import sys
 
-sys.path.insert(0, "/root/reference/poller")
+POLLER = "/root/reference/poller"
+if not os.path.isdir(POLLER):
+    sys.exit(f"stats_fidelity_gen: reference checkout missing: {POLLER} not found")
+sys.path.insert(0, POLLER)
 os.chdir("/tmp")  # process_data writes market_stats.json to cwd
 import regex_analyzer as ra  # noqa: E402
 
