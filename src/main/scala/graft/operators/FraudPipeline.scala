@@ -35,8 +35,9 @@ import org.apache.spark.sql.functions._
   * (write, cache register, or collected rows for driver-side marts).
   *
   * Scale posture: the chain inherits each stage's own discipline —
-  * the corpus is read ONCE into a cached slim frame consumed by both
-  * the stats and the scoring passes; stats rows are model metadata
+  * the corpus is read and spec-extracted ONCE into a cached frame
+  * consumed by both the stats and the scoring passes, so neither pass
+  * re-plans the extraction tree; stats rows are model metadata
   * (bounded by categories × conditions × components), so feeding them
   * back via the driver is the broadcast-a-model shape, not a
   * collect-the-data anti-pattern; the alert filter lands on the
@@ -62,15 +63,19 @@ object FraudPipeline {
           .otherwise(col("description")))
 
   /** The chain from an already-landed NDJSON corpus dir: schema'd
-    * ingest → stats generation → scoring (with hidden-price
-    * correction) → alert filter. One cached slim corpus frame feeds
-    * both passes. */
+    * ingest → spec extraction → stats generation → scoring (with
+    * hidden-price correction) → alert filter. One cached specced
+    * frame feeds both passes: the scoring joins then key on cached
+    * attributes, not on aliases of the extraction tree, which Spark's
+    * partition-pruning rule would otherwise walk on every plan. */
   def pipelineFrom(s: SparkSession, ndjsonDir: String,
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val items = graft.sources.Ingest.readNdjson(s, ndjsonDir, schema)
+    val specced = graft.functions.TextSpecs.withSpecs(
+        graft.sources.Ingest.readNdjson(s, ndjsonDir, schema),
+        col("title"), col("description"))
       .transform(graft.CacheRegistry.register)
-    val statsRows = RiskEngine.generateMarketStats(items)
-    val scored = RiskEngine.scorePipeline(items, statsRows)
+    val statsRows = RiskEngine.marketStatsOf(specced)
+    val scored = RiskEngine.scoreSpecced(specced, statsRows)
     scored
       .filter(col("risk_score") >= AlertThreshold)
       .select(col("item_id"), col("price"), col("detected_category"),

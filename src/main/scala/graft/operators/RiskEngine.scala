@@ -132,13 +132,17 @@ object RiskEngine {
   }
 
   private def scoreItemsResolved(items: DataFrame,
-      segs: Seq[SegStats], comps: Seq[CompStats],
-      passthrough: Seq[String] = Nil): DataFrame = {
-    val staged = stagedScore(
+      segs: Seq[SegStats], comps: Seq[CompStats]): DataFrame =
+    scoreSpeccedResolved(
       TextSpecs.withSpecs(items, col("title"), col("description")), segs, comps)
 
+  private def scoreSpeccedResolved(specced: DataFrame,
+      segs: Seq[SegStats], comps: Seq[CompStats],
+      passthrough: Seq[String] = Nil): DataFrame = {
+    val staged = stagedScore(specced, segs, comps)
+
     val price = col("price")
-    val s = items.sparkSession
+    val s = specced.sparkSession
     // Python-round parity on the rounded output fields (see PyRound)
     def pyRound2(c: Column): Column = graft.plans.GraftFunctions.pyRound(s, c, 2)
 
@@ -246,9 +250,17 @@ object RiskEngine {
     * text; items still under 1 with no correction are dropped; then
     * the risk engine runs on the effective price. Adds a `corrected`
     * flag like the reference's corrected_price. */
-  def scorePipeline(items: DataFrame, statsRows: DataFrame): DataFrame = {
+  def scorePipeline(items: DataFrame, statsRows: DataFrame): DataFrame =
+    scoreSpecced(TextSpecs.withSpecs(items, col("title"), col("description")),
+      statsRows)
+
+  /** [[scorePipeline]] over a frame that already carries the
+    * `TextSpecs.withSpecs` columns. The correction may run after
+    * extraction because extraction reads only title and description,
+    * never price. */
+  def scoreSpecced(specced: DataFrame, statsRows: DataFrame): DataFrame = {
     val hidden = TextSpecs.extractHiddenPrice(col("title"), col("description"))
-    val prepared = items
+    val prepared = specced
       .withColumn("_hidden", when(col("price") < 5.0, hidden))
       .withColumn("corrected", col("_hidden").isNotNull)
       .withColumn("price",
@@ -258,7 +270,7 @@ object RiskEngine {
     val (segs, comps) = statsFromRows(statsRows)
     // `corrected` rides through the scoring projection — the old
     // self-join re-evaluated the hidden-price regexes in a second scan
-    scoreItemsResolved(prepared, segs, comps, passthrough = Seq("corrected"))
+    scoreSpeccedResolved(prepared, segs, comps, passthrough = Seq("corrected"))
   }
 
   /** Driver query face (rows-only): synthesize a listing-shaped item
@@ -441,17 +453,22 @@ object RiskEngine {
     * JUNK dropped; UNCERTAIN (segment, or no cpu AND no ram — checked
     * BEFORE broken/accessory); BROKEN/ACCESSORY secondary; else PRIME.
     */
-  def generateMarketStats(items: DataFrame): DataFrame = {
-    val s = items.sparkSession
-    // ONE cache boundary, after routing (inside aggregateStats): only
-    // the slim (route, category, cond, price, cpu, ram, gpu) frame is
-    // ever materialized — never the full-text corpus. The extraction →
-    // routing cascade stays a single uncached plan: every heavy
-    // intermediate (withSpecs stages, cond, segment) is a named
-    // multi-referenced column, so CollapseProject's cheapness guard
-    // keeps the staging and the regex scans run once per row
-    // (PlanSpec pins the per-plan regex-scan ceiling).
-    val specced = TextSpecs.withSpecs(items, col("title"), col("description"))
+  def generateMarketStats(items: DataFrame): DataFrame =
+    marketStatsOf(TextSpecs.withSpecs(items, col("title"), col("description")))
+
+  /** [[generateMarketStats]] over a frame that already carries the
+    * `TextSpecs.withSpecs` columns. The one cache boundary here is
+    * after routing (inside aggregateStats), so only the slim (route,
+    * category, cond, price, cpu, ram, gpu) frame is materialized. A
+    * caller that also scores the same items caches `specced` itself
+    * (FraudPipeline.pipelineFrom) so extraction is planned and run
+    * once. Uncached, the extraction → routing cascade is one plan:
+    * every heavy intermediate (withSpecs stages, cond, segment) is a
+    * named multi-referenced column, so CollapseProject's cheapness
+    * guard keeps the staging and the regex scans run once per row
+    * (PlanSpec pins the per-plan regex-scan ceiling). */
+  def marketStatsOf(specced: DataFrame): DataFrame = {
+    val s = specced.sparkSession
     aggregateStats(routeItems(specced),
       c => graft.plans.GraftFunctions.pyRound(s, c, 2))
   }

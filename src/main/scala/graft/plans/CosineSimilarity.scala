@@ -144,11 +144,17 @@ object GraftFunctions {
       exprs => DeleteVariants(exprs.head,
         exprs(1).eval().asInstanceOf[Number].intValue())))
 
-  def register(spark: SparkSession): Unit =
+  /** Register the native functions the session does not have yet.
+    * Every column-API face calls this, so re-registering would replace
+    * each function (and log a warning) on every call. */
+  def register(spark: SparkSession): Unit = {
+    val functions = spark.sessionState.functionRegistry
     registry.foreach { case (name, clazz, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name), new ExpressionInfo(clazz, name), builder)
+      val id = FunctionIdentifier(name)
+      if (!functions.functionExists(id))
+        functions.registerFunction(id, new ExpressionInfo(clazz, name), builder)
     }
+  }
 
   /** The same registry in SparkSessionExtensions form — keeps the
     * extensions-injected function set identical to the session-local

@@ -13,6 +13,10 @@ class FraudPipelineSpec extends SparkSpec {
   test("fp01: composed pipeline == staged stages, row-for-row, with " +
       "the hidden-price correction stage live") {
     val dir = sf("sf0.001")
+    // start from an empty cache: the hygiene check at the end measures
+    // only what this test pinned, not what earlier suites left behind
+    graft.CacheRegistry.unpersistAll()
+    spark.catalog.clearCache()
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Double, String, String, Double, Double, Int, String, Boolean)]
         .collect().toSet
@@ -52,6 +56,10 @@ class FraudPipelineSpec extends SparkSpec {
     assert(composedMart == mart(staged) && composedMart.nonEmpty,
       "factors mart drifted between composed and staged")
     graft.CacheRegistry.unpersistAll()
+    // the chain's specced cache is registered, so the release above
+    // leaves the session as the test found it
+    assert(graft.CacheRegistry.registeredCount == 0)
+    assert(spark.sharedState.cacheManager.isEmpty, "a cache outlived unpersistAll")
   }
 
   test("fp02: the enriched subchain is exactly the f05 alert set, " +

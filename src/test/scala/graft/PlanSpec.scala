@@ -260,6 +260,21 @@ class PlanSpec extends SparkSpec {
     assert(r.getLong(6) == 4L) // the(1) + tab/##le(2) + [UNK](1)
   }
 
+  test("native functions register once: later calls keep the first registration") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.functions.lit
+    val functions = spark.sessionState.functionRegistry
+    val id = FunctionIdentifier(graft.plans.GraftFunctions.PyRoundName)
+    graft.plans.GraftFunctions.pyRound(spark, lit(2.675), 2)
+    val info = functions.lookupFunction(id).get
+    val builder = functions.lookupFunctionBuilder(id).get
+    graft.plans.GraftFunctions.pyRound(spark, lit(2.675), 2)
+    assert(functions.lookupFunction(id).get eq info,
+      "graft_pyround was registered again")
+    assert(functions.lookupFunctionBuilder(id).get eq builder,
+      "graft_pyround was registered again")
+  }
+
   test("extraction plan keeps regex scans staged (no tree re-duplication)") {
     // The scan-staging split holds the optimized plan at ~14
     // regexp_extract_all occurrences; before staging, subtree
@@ -276,6 +291,32 @@ class PlanSpec extends SparkSpec {
         .findAllIn(node.expressions.map(_.toString).mkString).length
     }
     assert(total <= 20, s"extraction plan holds $total regex scans — staging regressed")
+  }
+
+  test("fp01 plans spec extraction once, inside the specced cache") {
+    // Stats and scoring both read ONE cached withSpecs frame. A second,
+    // uncached extraction would put withSpecs' spam-truncation fold
+    // (its one ArrayAggregate) back into the live plan, where the
+    // scoring joins key on aliases of the whole extraction tree.
+    import org.apache.spark.sql.catalyst.expressions.ArrayAggregate
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    def folds(p: LogicalPlan): Int = {
+      var n = 0
+      p.foreach { node =>
+        node.expressions.foreach(e => n += e.collect { case a: ArrayAggregate => a }.size)
+      }
+      n
+    }
+    try {
+      val opt = operators.FraudPipeline.fp01(spark, sf())
+        .queryExecution.optimizedPlan
+      // foreach never descends into an InMemoryRelation's cached plan
+      val live = folds(opt)
+      assert(live == 0, s"fp01 plans $live uncached spec-extraction tree(s)")
+      val cached = opt.collect { case r: InMemoryRelation => folds(r.cacheBuilder.logicalPlan) }.sum
+      assert(cached >= 1, "no cached plan holds the extraction — guard disarmed")
+    } finally CacheRegistry.unpersistAll()
   }
 
   test("f19/f20: no scoring tree inside any Filter (scored-cache boundary holds)") {
