@@ -66,17 +66,7 @@ object Bench {
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // graft's native expressions pin ICU case mapping (plans/TextStats
-      // scaladoc); force the Column-form lower() onto the same path so
-      // the two can never diverge under a session-level conf flip
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.icu.caseMappings.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus.toInt).getOrCreate()
     // Untimed generic warmup: JVM/classloader/codegen-infra/parquet
     // reader spin-up PLUS the hot runtime codepaths every query family
     // exercises — all on synthetic data (none of the sf tables), so

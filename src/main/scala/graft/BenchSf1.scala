@@ -165,14 +165,7 @@ object BenchSf1 {
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val out = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft-sf1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.icu.caseMappings.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus.toInt).getOrCreate()
     val fs = new org.apache.hadoop.fs.Path(out)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$out/documents.parquet")))
@@ -316,8 +309,9 @@ object BenchSf1 {
       // here (1.38e8 pair mass, hot share 0; the pinned twins above
       // measure what the wrong gear costs: prefix 243.6 s vs capped
       // 54.7 in the committed r17 sweep). The face asserts the route
-      // before timing — a silently flipped route would otherwise
-      // read as a mere regression.
+      // on ONE census, then runs the capped gear that route names — a
+      // silently flipped route would otherwise read as a mere
+      // regression, and autoPairs here would pay the census again.
       "d06_dedup_clusters_auto" -> ((s: SparkSession, dir: String) => {
         val docs = Tables.documents(s, dir)
         val gear = operators.Dedup.chooseGear(
@@ -325,7 +319,9 @@ object BenchSf1 {
         require(gear == operators.Dedup.CappedGear,
           s"replica-corpus route drifted: expected CappedGear, got $gear")
         operators.Dedup.connectedComponents(
-          operators.Dedup.autoPairs(docs).select(col("a"), col("b")),
+          operators.Dedup.jaccardPairs(docs,
+            maxDf = Some(operators.Dedup.DefaultMaxDf))
+            .select(col("a"), col("b")),
           docs.select(col("doc_id").as("id")))
       }))
     // ONE timing methodology for every bench artifact: Bench.timeFace

@@ -1,15 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Plan-review helper: prints formatted physical plans for queries
   * named on the command line (default: a pushdown/broadcast sample). */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.icu.caseMappings.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(8).getOrCreate()
     val dir = if (args.nonEmpty && args(0).startsWith("/")) args(0) else "/root/testdata/sf0.01"
     val names = args.filterNot(_.startsWith("/")).toSeq match {
       case Nil => Seq("q02_filter_project", "q03_join_agg", "f03_zscore", "s01_ann_bruteforce")

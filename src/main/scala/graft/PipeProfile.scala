@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** fp01 stage-split profiler (r18 verdict item 3): attributes the
@@ -17,14 +16,7 @@ object PipeProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.icu.caseMappings.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus.toInt).getOrCreate()
     // the Bench warmup convention, shortened (JIT + codegen infra)
     spark.range(1000000).selectExpr("sum(id * 2)").collect()
 
@@ -40,10 +32,15 @@ object PipeProfile {
     val items = sources.Ingest.readNdjson(spark, root, c.schema)
       .transform(CacheRegistry.register)
     val tIngest = t { consume(items) } // read + cache fill
-    val statsRows = operators.RiskEngine.generateMarketStats(items)
+    // one cached specced frame feeds both passes, as in
+    // FraudPipeline.pipelineFrom: the stats stage fills it
+    val specced = functions.TextSpecs
+      .withSpecs(items, col("title"), col("description"))
+      .transform(CacheRegistry.register)
+    val statsRows = operators.RiskEngine.marketStatsOf(specced)
       .transform(CacheRegistry.register)
     val tStats = t { consume(statsRows) } // extraction + aggregation
-    val scored = operators.RiskEngine.scorePipeline(items, statsRows)
+    val scored = operators.RiskEngine.scoreSpecced(specced, statsRows)
       .transform(CacheRegistry.register)
     val tScore = t { consume(scored) }
     val alerts = scored

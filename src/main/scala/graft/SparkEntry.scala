@@ -65,7 +65,7 @@ object SparkEntry {
     // point, through the shipped artifact
     "c03c_pack_subword_fit32k" -> ((s, dir) =>
       operators.BpeLearn.c03cFit32k(s, dir,
-        s"${GateScratch.fresh(s, "bpe32k")}/fit")),
+        s"${PidScratch.fresh(s, "graft-gatebench", "bpe32k")}/fit")),
     "d07_winnow_pairs_capped" -> ((s, dir) =>
       operators.Dedup.winnowPairs(Tables.documents(s, dir))),
     // the degree-ordering binding demonstration pair (r15 verdict
@@ -94,7 +94,7 @@ object SparkEntry {
     // after c10_clean_full so the pair reads as a twin comparison
     "c10_clean_staged" -> ((s, dir) =>
       operators.Corpus.c10Staged(s, dir,
-        s"${GateScratch.fresh(s, "c10stage")}/stage")),
+        s"${PidScratch.fresh(s, "graft-gatebench", "c10stage")}/stage")),
     "d10_run_overlap_capped" -> ((s, dir) =>
       operators.Dedup.d10(s, dir,
         maxDf = Some(operators.Dedup.DefaultMaxDf))),
@@ -166,7 +166,7 @@ object SparkEntry {
     // the bench takes reads the real output.
     "st02_gate_trigger" -> ((s, dir) => {
       import org.apache.spark.sql.functions.{col, lit, pmod}
-      val root = GateScratch.fresh(s, "trig")
+      val root = PidScratch.fresh(s, "graft-gatebench", "trig")
       val docsDir = s"$root/docs"; val fpDir = s"$root/fp"
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       (0L to 1L).foreach { b =>
@@ -181,7 +181,7 @@ object SparkEntry {
     // generation, and the timed read is the merge-on-read view.
     "st04_upsert_cdc" -> ((s, dir) => {
       import org.apache.spark.sql.functions.{col, lit}
-      val root = GateScratch.fresh(s, "upsert")
+      val root = PidScratch.fresh(s, "graft-gatebench", "upsert")
       val base = s"$root/base"; val delta = s"$root/delta"
       val docs = graft.Tables.documents(s, dir)
       streaming.UpsertStream.upsertBatch(
@@ -199,7 +199,7 @@ object SparkEntry {
     // retention + the merged read-back, the whole lifecycle)
     "st06_alert_sink" -> ((s, dir) => {
       import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-      val root = GateScratch.fresh(s, "alertsink")
+      val root = PidScratch.fresh(s, "graft-gatebench", "alertsink")
       val alerts = streaming.Alerts.st05(s, dir)
         .transform(graft.CacheRegistry.register)
       (0L to 1L).foreach { b =>
@@ -216,7 +216,7 @@ object SparkEntry {
     // from the maintained artifact
     "st07_index_maintain" -> ((s, dir) => {
       import org.apache.spark.sql.functions.{col, pmod, lit}
-      val root = GateScratch.fresh(s, "idxmaint")
+      val root = PidScratch.fresh(s, "graft-gatebench", "idxmaint")
       val docs = Tables.documents(s, dir)
       (0L to 1L).foreach { b =>
         operators.Search.indexBatch(
@@ -231,7 +231,7 @@ object SparkEntry {
     // probe against the accumulated state), alerts read back
     "st08_linkage_gate" -> ((s, dir) => {
       import org.apache.spark.sql.functions.{col, pmod, lit}
-      val root = GateScratch.fresh(s, "linkgate")
+      val root = PidScratch.fresh(s, "graft-gatebench", "linkgate")
       val recs = Tables.customer(s, dir)
         .select(col("c_custkey").as("key"), col("c_name").as("name"),
           col("c_nationkey").cast("long").as("block"))
@@ -268,7 +268,7 @@ object SparkEntry {
     // set from the maintained artifact
     "st09_vector_maintain" -> ((s, dir) => {
       import org.apache.spark.sql.functions.{col, lit, pmod}
-      val root = GateScratch.fresh(s, "vecmaint")
+      val root = PidScratch.fresh(s, "graft-gatebench", "vecmaint")
       val e = Tables.embeddings(s, dir)
       (0L to 1L).foreach { b =>
         operators.VectorIndex.vectorBatch(
@@ -287,7 +287,8 @@ object SparkEntry {
     // state built UNTIMED by the benchSetup hook of the same name —
     // the stream-stopped pass an operator runs between triggers.
     "st03_maintain" -> ((s, dir) => {
-      val root = GateScratch.path(s, "maint") // state from benchSetup
+      // gate state built by the benchSetup hook of the same name
+      val root = PidScratch.path("graft-gatebench", "maint")
       streaming.Ingest.maintain(s, s"$root/docs", s"$root/fp",
         belowBatch = 1L)
       s.read.parquet(s"$root/docs")
@@ -300,7 +301,7 @@ object SparkEntry {
   def benchSetup: Map[String, (SparkSession, String) => Unit] = Map(
     "st03_maintain" -> ((s, dir) => {
       import org.apache.spark.sql.functions.{col, lit, pmod}
-      val root = GateScratch.fresh(s, "maint")
+      val root = PidScratch.fresh(s, "graft-gatebench", "maint")
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       streaming.Ingest.gateBatch(
         docs.filter(pmod(col("doc_id"), lit(2)) === 0L), 0L,
@@ -334,7 +335,7 @@ object SparkEntry {
     * batch 0 — the accumulated state the timed trickles probe. */
   private def trickleSeed(s: SparkSession, dir: String, tag: String): Unit = {
     import org.apache.spark.sql.functions.{col, lit, pmod}
-    val root = GateScratch.fresh(s, tag)
+    val root = PidScratch.fresh(s, "graft-gatebench", tag)
     operators.Linkage.linkageBatch(
       trickleRecs(s, dir).filter(pmod(col("key"), lit(30)) =!= 0L), 0L, root)
   }
@@ -345,7 +346,7 @@ object SparkEntry {
   private def trickleGate(s: SparkSession, dir: String, tag: String,
       probeBroadcastRows: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit, pmod}
-    val root = GateScratch.path(s, tag)
+    val root = PidScratch.path("graft-gatebench", tag)
     val recs = trickleRecs(s, dir)
     (1L to 10L).foreach { b =>
       operators.Linkage.linkageBatch(
@@ -380,14 +381,6 @@ object SparkEntry {
     // r19: construction ensures (first call: builds) the graph mart
     "g03_pagerank_staged", "g04_triangles_staged", "g06_kcore_staged",
     "g07_census_staged", "f34_propagation_staged", "g08_graph_mart_build")
-
-  /** Bench scratch — see [[PidScratch]] for the lifecycle contract. */
-  private object GateScratch {
-    def path(s: SparkSession, tag: String): String =
-      PidScratch.path("graft-gatebench", tag)
-    def fresh(s: SparkSession, tag: String): String =
-      PidScratch.fresh(s, "graft-gatebench", tag)
-  }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -285,11 +285,10 @@ object Dedup {
   // Committed censuses behind the thresholds: sf0.1 docs 1.27e6 mass
   // / hot 0 → plain; d09 boilerplate 9.83e7 / hotShare 1.0 → prefix;
   // sf1 replica 1.38e8 / hotShare 0 (max df 253 < cap) → capped.
-  // The census is a Spark ACTION, memoized per canonicalized input
-  // plan (the g04 hubGateMemo rationale: plan-only uses must not
-  // launch jobs twice, and a corpus's regime never flips within a
-  // session). Masses sum as doubles — at 100 TB df² overflows int64
-  // and the census is a routing signal, not an exact count.
+  // The census is a Spark ACTION run once per autoPairs call, so
+  // the gear choice always reflects the corpus as it is read now.
+  // Masses sum as doubles — at 100 TB df² overflows int64 and the
+  // census is a routing signal, not an exact count.
   // ---------------------------------------------------------------
 
   sealed trait PairGear
@@ -312,139 +311,22 @@ object Dedup {
   val PlainPairBudget: Double = 1.6e7
   val HotShareThreshold = 0.5
 
-  private val gearCensusMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int),
-      GearCensus]
-
-  // ---------------------------------------------------------------
-  // Persistent census cache (r18 verdict item 4): the census verdict
-  // is a per-CORPUS fact, not a per-session one — the in-JVM memo
-  // above amortizes it within a session, but every fresh JVM (the
-  // isolated-bench posture; a new job on the same corpus) paid the
-  // shingle-census job once per routed composition (~1-2 s at
-  // sf0.1). The verdict now persists beside the session tmp as a
-  // tiny text artifact (the RiskEngine model-metadata pattern: masses
-  // + cap + corpus fingerprint), keyed by the md5 of the CANONICALIZED
-  // input plan (alias-invariant, path-bearing, JVM-stable text) and
-  // guarded by a per-file (path, length, mtime) fingerprint — any
-  // file added, removed, rewritten, or replaced (including an
-  // mtime-preserving copy: the length-or-mtime delta still flips the
-  // hash) invalidates the entry and the live census recounts and
-  // rewrites it. In-memory corpora (no input files) and any
-  // read/write failure fall back to the live census. NOTE the route
-  // IS output-affecting when it picks the lossy capped gear, which
-  // is exactly why the fingerprint must be per-file strong (r19
-  // advice item 1). Validity probing is one driver-side
-  // getFileStatus per input file — bounded by the corpus's file
-  // count (a production deployment would key on a table version
-  // instead).
-  // ---------------------------------------------------------------
-
-  private def censusRoot: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft-gearcensus"
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  /** (artifact path, files fingerprint, max mtime) — None for
-    * corpora with no file inputs. The fingerprint hashes each file's
-    * (path, length, mtime) — not just the sorted name list: an
-    * mtime-preserving replace (mv, rsync -a, object-store copy)
-    * changes length or leaves mtime+length intact only when the
-    * bytes genuinely match the ones the census counted, so a stale
-    * census cannot silently mis-route the lossy capped gear across
-    * corpus versions (r19 advice item 1). The FileStatus is already
-    * fetched per file, so the stronger key costs nothing extra. */
-  private def censusKey(docs: DataFrame, cap: Int)
-      : Option[(org.apache.hadoop.fs.Path, String, Long)] = {
-    val files = docs.inputFiles.sorted
-    if (files.isEmpty) None
-    else scala.util.Try {
-      val conf = docs.sparkSession.sparkContext.hadoopConfiguration
-      val stats = files.map { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        val st = p.getFileSystem(conf).getFileStatus(p)
-        (f, st.getLen, st.getModificationTime)
-      }
-      // "\u0000" (the escape, never a raw control byte in source —
-      // r19 advice item 2: a literal NUL made grep treat this file as
-      // binary) as the separator no path/plan string can contain
-      val sep = "\u0000"
-      val key = md5hex(
-        docs.queryExecution.analyzed.canonicalized.treeString + sep + cap)
-      (new org.apache.hadoop.fs.Path(s"$censusRoot/$key.census"),
-        md5hex(stats.map { case (f, l, m) => s"$f$sep$l$sep$m" }
-          .mkString("\n")),
-        stats.map(_._3).max)
-    }.toOption
-  }
-
-  private def readPersistedCensus(s: org.apache.spark.sql.SparkSession,
-      p: org.apache.hadoop.fs.Path, filesHash: String,
-      mtime: Long): Option[GearCensus] =
-    scala.util.Try {
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val txt =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        val kv = txt.linesIterator.map(_.split("=", 2))
-          .collect { case Array(k, v) => k -> v }.toMap
-        if (kv.get("files").contains(filesHash) &&
-            kv.get("mtime").contains(mtime.toString))
-          Some(GearCensus(kv("total").toDouble, kv("hot").toDouble))
-        else None // stale (corpus changed) or torn — live recount
-      }
-    }.toOption.flatten
-
-  private def writePersistedCensus(s: org.apache.spark.sql.SparkSession,
-      p: org.apache.hadoop.fs.Path, filesHash: String, mtime: Long,
-      c: GearCensus): Unit =
-    scala.util.Try { // cache write failure must never fail the operator
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val out = fs.create(p, true)
-      try out.write(
-        (s"total=${java.lang.Double.toString(c.totalPairMass)}\n" +
-          s"hot=${java.lang.Double.toString(c.hotPairMass)}\n" +
-          s"files=$filesHash\nmtime=$mtime\n").getBytes("UTF-8"))
-      finally out.close()
-    }
-
   /** One bounded-pull census aggregate over the corpus's shingle
-    * frame, memoized per (canonicalized input plan, cap) — hotPairMass
-    * depends on the cap, so a different cap must recount — and
-    * persisted across JVMs (see the cache block above). */
+    * frame. A Spark action, run live on every call: hotPairMass
+    * depends on the cap, and the corpus behind `docs` may change
+    * between calls, so nothing is kept across calls. */
   def gearCensus(docs: DataFrame, cap: Int = DefaultMaxDf): GearCensus = {
-    if (gearCensusMemo.size > 64) gearCensusMemo.clear()
-    gearCensusMemo.getOrElseUpdate(
-      (docs.queryExecution.analyzed.canonicalized, cap), {
-        val key = censusKey(docs, cap)
-        val persisted = key.flatMap { case (p, fh, mt) =>
-          readPersistedCensus(docs.sparkSession, p, fh, mt) }
-        persisted.getOrElse {
-          val mass = col("df").cast("double") * (col("df") - 1) / 2
-          val r = graft.CacheRegistry.scoped {
-            shingleFrame(docs)
-              .groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-              .agg(sum(mass), sum(when(col("df") > cap, mass).otherwise(0.0)))
-              .head()
-          }
-          val c = GearCensus(
-            if (r.isNullAt(0)) 0.0 else r.getDouble(0),
-            if (r.isNullAt(1)) 0.0 else r.getDouble(1))
-          key.foreach { case (p, fh, mt) =>
-            writePersistedCensus(docs.sparkSession, p, fh, mt, c) }
-          c
-        }
-      })
+    val mass = col("df").cast("double") * (col("df") - 1) / 2
+    val r = graft.CacheRegistry.scoped {
+      shingleFrame(docs)
+        .groupBy(col("shingle")).agg(count(lit(1)).as("df"))
+        .agg(sum(mass), sum(when(col("df") > cap, mass).otherwise(0.0)))
+        .head()
+    }
+    GearCensus(
+      if (r.isNullAt(0)) 0.0 else r.getDouble(0),
+      if (r.isNullAt(1)) 0.0 else r.getDouble(1))
   }
-
-  /** Test hook: drop the in-JVM memo so a spec can exercise the
-    * persisted-artifact path within one JVM. */
-  private[graft] def resetGearCensusMemo(): Unit = gearCensusMemo.clear()
 
   /** The routing rule alone — spec-pinned on the committed corpora's
     * censuses and on the mechanism's boundaries. */
@@ -455,8 +337,9 @@ object Dedup {
       PrefixGear
     else CappedGear
 
-  /** Near-dup pairs through the census-chosen gear. Output contract
-    * is jaccardPairs' (a, b, inter, jacc); the capped route keeps the
+  /** Near-dup pairs through the census-chosen gear. The gear is
+    * chosen once per call, from one live census. Output contract is
+    * jaccardPairs' (a, b, inter, jacc); the capped route keeps the
     * documented cap-loss exception, the other two are exact. */
   def autoPairs(docs: DataFrame,
       threshold: Double = JaccardThreshold,

@@ -360,29 +360,6 @@ object Graph {
     * convention, never a data collect. */
   val SkewFactor = 16L
 
-  /** Per-input memo of the hub-gate decision (the q20 catalogSize
-    * rationale, r16 advice item 2): the gate is one bounded-pull
-    * aggregate but still a Spark ACTION, so plan-only uses of
-    * triangles() (Explain, spec plan asserts) would launch real jobs
-    * on every call — and within one session the same edge frame's
-    * skew class never flips. Keyed by the CANONICALIZED analyzed
-    * plan (structural equality, alias-invariant); bounded by a
-    * clear-at-64 cap so held plan trees can't accumulate across a
-    * long bench sweep. */
-  private val hubGateMemo = scala.collection.concurrent.TrieMap
-    .empty[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Boolean]
-
-  /** Per-input memo of linkPredict's (packable, wedge-mass) probe —
-    * same bounds as [[hubGateMemo]], but NOT the same staleness
-    * contract: a stale hub-gate verdict only costs performance, while
-    * a stale `packable` on in-session-mutated input would be a
-    * CORRECTNESS hazard — which is why the packed gear carries a
-    * runtime id-range guard (see linkPredict's idGuard) that turns a
-    * stale verdict into a loud failure, never silent key corruption. */
-  private val linkStatsMemo = scala.collection.concurrent.TrieMap
-    .empty[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      (Boolean, Long)]
-
   /** The shared first half of [[triangles]] and [[graphCensus]]:
     * the cached degree frame plus the per-edge common-neighbor frame
     * (a, b, common = N⁺(a) ∩ N⁺(b) under the adaptive orientation).
@@ -400,15 +377,11 @@ object Graph {
     val deg = degIn.getOrElse(degrees(e0))
       .transform(graft.CacheRegistry.register)
     val orient = degreeOrdered.getOrElse {
-      if (hubGateMemo.size > 64) hubGateMemo.clear()
-      hubGateMemo.getOrElseUpdate(
-        edges.queryExecution.analyzed.canonicalized, {
-          val r = deg.agg(max(col("degree")).cast("long"),
-            (sum(col("degree")) / 2).cast("long")).head()
-          // an empty edge frame aggregates to nulls — nothing to orient
-          !r.isNullAt(0) &&
-            r.getLong(0) * r.getLong(0) > SkewFactor * r.getLong(1)
-        })
+      val r = deg.agg(max(col("degree")).cast("long"),
+        (sum(col("degree")) / 2).cast("long")).head()
+      // an empty edge frame aggregates to nulls — nothing to orient
+      !r.isNullAt(0) &&
+        r.getLong(0) * r.getLong(0) > SkewFactor * r.getLong(1)
     }
     // only a genuinely NEW frame gets a cache pin — re-registering e0
     // on the unoriented gear would hold a duplicate registry entry
@@ -665,29 +638,19 @@ object Graph {
     // node-cardinality, consumed 4× (ed build ×2, scoreTail ×2) —
     // cached so the edge scan + degree shuffle runs once
     val deg = degrees(e0).transform(graft.CacheRegistry.register)
-    // ONE bounded action on the cached node-sized frame: id range
-    // (decides the packed-key gear) + exact wedge mass (sizes the
-    // aggregate). Warms the deg cache the big plan reuses anyway.
-    // Memoized per canonicalized edge plan (the hubGateMemo rationale,
-    // r18 advice): the probe is a real Spark job, and plan-only uses
-    // of linkPredict (Explain, spec plan asserts) must not launch a
-    // degree shuffle on every call — within one session the same edge
-    // frame's id range and wedge mass never change. min/max are cast
-    // to long IN the agg so the probe is id-type-agnostic (an
-    // IntegerType node column otherwise throws on getLong).
-    val (packable, wedgeRows) = {
-      if (linkStatsMemo.size > 64) linkStatsMemo.clear()
-      linkStatsMemo.getOrElseUpdate(
-        edges.queryExecution.analyzed.canonicalized, {
-          val statsRow = deg.agg(min(col("node")).cast("long"),
-            max(col("node")).cast("long"),
-            sum(col("degree") * (col("degree") - lit(1L))).cast("long"))
-            .head()
-          (!statsRow.isNullAt(0) && statsRow.getLong(0) >= 0L &&
-             statsRow.getLong(1) < (1L << 31),
-           if (statsRow.isNullAt(2)) 0L else statsRow.getLong(2) / 2)
-        })
-    }
+    // ONE bounded action on the cached node-sized frame, run on every
+    // call: id range (decides the packed-key gear) + exact wedge mass
+    // (sizes the aggregate). Warms the deg cache the big plan reuses
+    // anyway. min/max are cast to long IN the agg so the probe is
+    // id-type-agnostic (an IntegerType node column otherwise throws
+    // on getLong).
+    val statsRow = deg.agg(min(col("node")).cast("long"),
+      max(col("node")).cast("long"),
+      sum(col("degree") * (col("degree") - lit(1L))).cast("long"))
+      .head()
+    val packable = !statsRow.isNullAt(0) && statsRow.getLong(0) >= 0L &&
+      statsRow.getLong(1) < (1L << 31)
+    val wedgeRows = if (statsRow.isNullAt(2)) 0L else statsRow.getLong(2) / 2
     val sessParts =
       e0.sparkSession.sessionState.conf.numShufflePartitions
     // ~500k groups (≤ wedge rows) per final-agg task ≈ 25-30 MB of
@@ -715,14 +678,14 @@ object Graph {
     // error). Zero is the safe never-read placeholder.
     def termOf(d: Column): Column =
       when(d >= 2, (aaTerm(d) * scale).cast("int")).otherwise(lit(0))
-    // packed-gear range guard (r19 advice item 3): `packable` comes
-    // from a plan-keyed MEMO, and unlike hubGateMemo (where staleness
-    // is output-invariant) a stale packable=true after the same path
-    // is rewritten in-session with ids >= 2^31 would CORRUPT the
-    // shifted pack keys. Guarding the edge endpoints (|E| rows, once,
-    // inside the cached frame) covers every wedge's x/y — the wedge
-    // stream only copies these values — so a stale verdict fails
-    // loudly instead of merging unrelated pairs.
+    // packed-gear range guard: the probe above and the packed plan
+    // below are separate jobs over an input that is read lazily, so
+    // the plan may see ids the probe never saw (a path rewritten
+    // between the two) — ids >= 2^31 would CORRUPT the shifted pack
+    // keys. Guarding the edge endpoints (|E| rows, once, inside the
+    // cached frame) covers every wedge's x/y — the wedge stream only
+    // copies these values — so such an input fails loudly instead of
+    // merging unrelated pairs.
     val idGuard: Column => Column =
       if (packable) { c =>
         val l = c.cast("long")
@@ -1085,140 +1048,27 @@ object Graph {
   def martDegrees(s: SparkSession, martDir: String): DataFrame =
     s.read.parquet(s"$martDir/degrees")
 
-  // ---------------------------------------------------------------
-  // Cross-session build-once ensure (r19 verdict item 6 — the 31e
-  // census-artifact pattern applied to the mart): the mart is a
-  // per-CORPUS artifact, so a pid-scoped root made every fresh JVM
-  // rebuild it (5.9 s at sf1). The root is now STABLE, keyed by a
-  // per-file (path, length, mtime) fingerprint of the lineitem input
-  // (the same validity key strength as the gear census — an
-  // mtime-preserving replace still flips it via length, and any
-  // rewrite flips mtime). A corpus change yields a DIFFERENT root, so
-  // a matching root can never serve stale data; stale sibling
-  // versions of the same tag are swept on rebuild. Commit protocol:
-  // build into a pid-suffixed tmp sibling, write FINGERPRINT last,
-  // then one atomic local-fs rename — a torn build is invisible
-  // (validity also demands both parquet _SUCCESS markers, so a
-  // partially deleted artifact is rebuilt, spec-pinned). Corpora
-  // whose input can't be fingerprinted fall back to the r18
-  // pid-scoped posture. A production deployment would key on a table
-  // version instead of file statuses.
-  // ---------------------------------------------------------------
   private val martLock = new Object
 
-  /** Mart-build counter — spec hook: a matching artifact must be
-    * SERVED (no Spark job), never rebuilt. */
-  private[graft] val martBuilds = new java.util.concurrent.atomic.AtomicLong
-
-  private def martBase: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft-graphmart-shared"
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  /** Per-file (path, length, mtime) fingerprint of the mart's input
-    * table — None when unfingerprintable (missing path, status
-    * failure), which routes to the pid-scoped fallback. Pure
-    * driver-side FileSystem listing, NEVER a DataFrame: a fresh
-    * `spark.read.parquet` pays a schema-inference job, and the whole
-    * point of the serve path is zero jobs (spec-pinned). */
-  private def martFingerprint(s: SparkSession, dir: String): Option[String] =
-    scala.util.Try {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/lineitem.parquet")
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) None
-      else {
-        def leaves(x: org.apache.hadoop.fs.FileStatus)
-            : Seq[org.apache.hadoop.fs.FileStatus] =
-          if (x.isDirectory)
-            fs.listStatus(x.getPath).toSeq
-              .filterNot { c =>
-                val n = c.getPath.getName
-                n.startsWith("_") || n.startsWith(".")
-              }.flatMap(leaves)
-          else Seq(x)
-        val stats = leaves(fs.getFileStatus(p))
-          .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
-          .sortBy(_._1)
-        if (stats.isEmpty) None
-        else {
-          val sep = "\u0000"
-          Some(md5hex(stats.map { case (f, l, m) => s"$f$sep$l$sep$m" }
-            .mkString("\n")))
-        }
-      }
-    }.toOption.flatten
-
-  private def martValid(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, fp: String): Boolean =
-    scala.util.Try {
-      val marker = new org.apache.hadoop.fs.Path(root, "FINGERPRINT")
-      fs.exists(marker) &&
-        fs.exists(new org.apache.hadoop.fs.Path(root, "edges/_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(root, "degrees/_SUCCESS")) && {
-          val in = fs.open(marker)
-          val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
-          txt.trim == fp
-        }
-    }.getOrElse(false)
-
+  /** The co-purchase mart of `dir`, built once per process per input
+    * dir into pid-scoped scratch (see [[graft.PidScratch]]), with
+    * `degrees/_SUCCESS` — written last — as the commit marker: a build
+    * torn before it is redone by the next call. No later process
+    * reads this pid's mart (PidScratch sweeps it once the pid is
+    * dead), so no run depends on what an earlier one left behind.
+    * The mart is NOT revalidated against its input: an input dir
+    * rewritten inside the same process needs a fresh build
+    * ([[g08MartBuild]]'s shape), not this ensure. */
   def ensureGraphMart(s: SparkSession, dir: String): String =
     martLock.synchronized {
       val tag = "mart-" + dir.replaceAll("[^A-Za-z0-9.-]", "_")
-      martFingerprint(s, dir) match {
-        case Some(fp) =>
-          val base = new org.apache.hadoop.fs.Path(martBase)
-          val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-          val root = new org.apache.hadoop.fs.Path(base, s"$tag-$fp")
-          if (!martValid(fs, root, fp)) {
-            martBuilds.incrementAndGet()
-            val tmp = new org.apache.hadoop.fs.Path(base,
-              s".build-${ProcessHandle.current().pid()}-$tag-$fp")
-            fs.delete(tmp, true)
-            writeGraphMart(s, dir, tmp.toString)
-            val out = fs.create(
-              new org.apache.hadoop.fs.Path(tmp, "FINGERPRINT"), true)
-            try out.write((fp + "\n").getBytes("UTF-8")) finally out.close()
-            // a concurrent pid may have committed a valid root while we
-            // built — serve it and drop ours; else replace the garbage
-            if (martValid(fs, root, fp)) fs.delete(tmp, true)
-            else {
-              fs.delete(root, true)
-              fs.mkdirs(base)
-              if (!fs.rename(tmp, root)) fs.delete(tmp, true)
-            }
-            // sweep stale corpus versions of this tag + dead-pid tmp
-            // leftovers — the leak stays bounded by live versions
-            scala.util.Try {
-              fs.listStatus(base).foreach { st =>
-                val n = st.getPath.getName
-                if (n.startsWith(s"$tag-") && n != s"$tag-$fp")
-                  fs.delete(st.getPath, true)
-                else if (n.startsWith(".build-")) {
-                  val pid = n.stripPrefix(".build-").takeWhile(_.isDigit)
-                  val alive = pid.nonEmpty && scala.util.Try(
-                    ProcessHandle.of(pid.toLong)
-                      .map[Boolean](_.isAlive).orElse(false)).getOrElse(true)
-                  if (!alive) fs.delete(st.getPath, true)
-                }
-              }
-            }
-          }
-          root.toString
-        case None =>
-          val root = graft.PidScratch.path("graft-graphmart", tag)
-          val marker =
-            new org.apache.hadoop.fs.Path(s"$root/degrees/_SUCCESS")
-          val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-          if (!fs.exists(marker)) {
-            martBuilds.incrementAndGet()
-            writeGraphMart(s, dir,
-              graft.PidScratch.fresh(s, "graft-graphmart", tag))
-          }
-          root
-      }
+      val root = graft.PidScratch.path("graft-graphmart", tag)
+      val marker = new org.apache.hadoop.fs.Path(s"$root/degrees/_SUCCESS")
+      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
+      if (!fs.exists(marker))
+        writeGraphMart(s, dir,
+          graft.PidScratch.fresh(s, "graft-graphmart", tag))
+      root
     }
 
   def g03Staged(s: SparkSession, dir: String): DataFrame =

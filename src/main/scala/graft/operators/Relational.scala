@@ -656,11 +656,6 @@ object Relational {
   val MinSupport = 3
   val CatalogPruneThreshold = 1000000L
 
-  /** Per-dir memo of the part-catalog row count backing q20's
-    * adaptive prune decision (see the comment at its use site). */
-  private val catalogSize =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
   def q20(s: SparkSession, dir: String): DataFrame =
     q20Adaptive(s, dir, CatalogPruneThreshold)
 
@@ -677,14 +672,10 @@ object Relational {
       .filter(col("n_orders") >= MinSupport)
       .transform(graft.CacheRegistry.register) // consumed 3× below
     val itemCnt = li.groupBy(col("pk")).agg(count(lit(1)).as("cnt"))
-    // catalog size from parquet metadata only (no columns read),
-    // memoized per (dir, threshold): the count is footer-cheap but
-    // still one Spark job per call — plan-only uses of q20 (explain,
-    // spec plan asserts) shouldn't launch it, and the decision is a
-    // coarse size-class bit that a static catalog dir never flips
-    // (r15 advice item 5; a refreshed catalog lands in a new dir)
-    val catalogItems = catalogSize.getOrElseUpdate(dir,
-      Tables.part(s, dir).count())
+    // catalog size from parquet metadata only (no columns read): one
+    // footer-cheap Spark job per call, so the prune decision always
+    // reflects the catalog as it is read now
+    val catalogItems = Tables.part(s, dir).count()
     // semi-prune: distinct pair members (small) broadcast INTO the
     // catalog-scale count frame; only the surviving counts broadcast.
     // Below the threshold the full itemCnt is broadcast-safe as-is

@@ -131,10 +131,16 @@ object RiskEngine {
     scoreItemsResolved(items, segs, comps)
   }
 
+  /** Extraction → scoring over one cached specced frame (the
+    * FraudPipeline.pipelineFrom shape): the four broadcast lookup
+    * joins then key on cached attributes, not on aliases of the
+    * extraction tree, which Spark's partition-pruning rule would
+    * otherwise walk on every plan. */
   private def scoreItemsResolved(items: DataFrame,
       segs: Seq[SegStats], comps: Seq[CompStats]): DataFrame =
     scoreSpeccedResolved(
-      TextSpecs.withSpecs(items, col("title"), col("description")), segs, comps)
+      TextSpecs.withSpecs(items, col("title"), col("description"))
+        .transform(graft.CacheRegistry.register), segs, comps)
 
   private def scoreSpeccedResolved(specced: DataFrame,
       segs: Seq[SegStats], comps: Seq[CompStats],

@@ -781,13 +781,12 @@ class DedupSpec extends SparkSpec {
       assert(c3.hotShare < 0.05, s"replica profile grew hot keys: $c3")
       assert(Dedup.chooseGear(c3, plainBudget = c3.totalPairMass / 10) ==
         Dedup.CappedGear)
-      // the census memo keys on (plan, cap): a tighter cap over the
-      // SAME corpus must recount hot mass, not replay the default
-      // cap's census (committed r17 review finding)
+      // hot mass depends on the cap: a tighter cap over the SAME
+      // corpus must count more of it
       val tight = Dedup.gearCensus(graft.Tables.documents(spark, sf()), cap = 2)
       val loose = Dedup.gearCensus(graft.Tables.documents(spark, sf()))
       assert(tight.hotPairMass > loose.hotPairMass,
-        s"cap=2 census replayed the default-cap memo: $tight vs $loose")
+        s"cap=2 census counted no extra hot mass: $tight vs $loose")
       // mechanism boundaries, pinned exactly
       assert(Dedup.chooseGear(Dedup.GearCensus(100, 0), 100) == Dedup.PlainGear)
       assert(Dedup.chooseGear(Dedup.GearCensus(101, 51), 100) == Dedup.PrefixGear)
@@ -801,62 +800,6 @@ class DedupSpec extends SparkSpec {
         maxDf = None).select("a", "b", "inter")
         .as[(Long, Long, Long)].collect().toSet
       assert(auto == plain)
-    } finally CacheRegistry.unpersistAll()
-  }
-
-  test("gear census persists across sessions: a memo-cleared recount " +
-      "reads the artifact jobless; corpus drift and garbage recount live") {
-    import graft.operators.Dedup
-    val sc = spark.sparkContext
-    def jobs() = sc.statusTracker.getJobIdsForGroup(null).length
-    // a corpus copy we own (we'll touch its mtime)
-    val root = java.nio.file.Files.createTempDirectory("census").toString
-    graft.Tables.documents(spark, sf()).write.parquet(s"$root/docs")
-    // frames constructed OUTSIDE measured windows (a fresh parquet
-    // read runs a schema-inference job of its own)
-    val d1 = spark.read.parquet(s"$root/docs")
-    val d2 = spark.read.parquet(s"$root/docs")
-    try {
-      val live = Dedup.gearCensus(d1) // live count, writes the artifact
-      // "new session": memo cleared — the verdict must come off the
-      // artifact, identical and WITHOUT launching the census job
-      Dedup.resetGearCensusMemo()
-      val before = jobs()
-      val cached = Dedup.gearCensus(d2)
-      assert(jobs() == before, "persisted census still launched a job")
-      assert(cached == live)
-      // corpus drift: bump a data file's mtime — the artifact is
-      // stale, the census recounts live (jobs observed) to the same
-      // values on the unchanged data, and re-persists
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(sc.hadoopConfiguration)
-      val dataFile = d1.inputFiles.head
-      val p = new org.apache.hadoop.fs.Path(dataFile)
-      fs.setTimes(p, fs.getFileStatus(p).getModificationTime + 10000, -1)
-      Dedup.resetGearCensusMemo()
-      val b2 = jobs()
-      assert(Dedup.gearCensus(d2) == live)
-      assert(jobs() > b2, "stale artifact was trusted after mtime drift")
-      // ...and the refreshed artifact serves the next session again
-      Dedup.resetGearCensusMemo()
-      val b3 = jobs()
-      assert(Dedup.gearCensus(d1) == live)
-      assert(jobs() == b3)
-      // a torn/garbage artifact falls back to the live census
-      val croot = new org.apache.hadoop.fs.Path(
-        s"${System.getProperty("java.io.tmpdir")}/graft-gearcensus")
-      fs.listStatus(croot).foreach { st =>
-        val out = fs.create(st.getPath, true)
-        out.write("garbage".getBytes("UTF-8")); out.close()
-      }
-      Dedup.resetGearCensusMemo()
-      val b4 = jobs()
-      assert(Dedup.gearCensus(d2) == live)
-      assert(jobs() > b4, "garbage artifact did not fall back to live")
-      // an in-memory corpus (no input files) censuses live, unpersisted
-      import spark.implicits._
-      val mem = Seq((1L, "a b c d e f g h i j")).toDF("doc_id", "text")
-      assert(Dedup.gearCensus(mem).totalPairMass == 0.0)
     } finally CacheRegistry.unpersistAll()
   }
 }

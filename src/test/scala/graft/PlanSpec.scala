@@ -9,6 +9,29 @@ class PlanSpec extends SparkSpec {
     SparkEntry.queries(name)(spark, sf("sf0.001"))
       .queryExecution.executedPlan.toString
 
+  /** Spec-extraction trees in a plan, counted by withSpecs' one
+    * ArrayAggregate (its spam-truncation fold). `foreach` never
+    * descends into an InMemoryRelation's cached plan, so on an
+    * optimized plan this counts the LIVE trees only. */
+  private def extractionFolds(
+      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int = {
+    import org.apache.spark.sql.catalyst.expressions.ArrayAggregate
+    var n = 0
+    p.foreach { node =>
+      node.expressions.foreach(e => n += e.collect { case a: ArrayAggregate => a }.size)
+    }
+    n
+  }
+
+  /** (live, cached) extraction trees in a face's optimized plan. */
+  private def extractionTrees(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val opt = df.queryExecution.optimizedPlan
+    (extractionFolds(opt), opt.collect {
+      case r: InMemoryRelation => extractionFolds(r.cacheBuilder.logicalPlan)
+    }.sum)
+  }
+
   test("q02: filters and projection reach the parquet scan") {
     val p = plan("q02_filter_project")
     assert(p.contains("PushedFilters: [IsNotNull"), "filters not pushed")
@@ -298,24 +321,22 @@ class PlanSpec extends SparkSpec {
     // uncached extraction would put withSpecs' spam-truncation fold
     // (its one ArrayAggregate) back into the live plan, where the
     // scoring joins key on aliases of the whole extraction tree.
-    import org.apache.spark.sql.catalyst.expressions.ArrayAggregate
-    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-    import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    def folds(p: LogicalPlan): Int = {
-      var n = 0
-      p.foreach { node =>
-        node.expressions.foreach(e => n += e.collect { case a: ArrayAggregate => a }.size)
-      }
-      n
-    }
     try {
-      val opt = operators.FraudPipeline.fp01(spark, sf())
-        .queryExecution.optimizedPlan
-      // foreach never descends into an InMemoryRelation's cached plan
-      val live = folds(opt)
+      val (live, cached) = extractionTrees(operators.FraudPipeline.fp01(spark, sf()))
       assert(live == 0, s"fp01 plans $live uncached spec-extraction tree(s)")
-      val cached = opt.collect { case r: InMemoryRelation => folds(r.cacheBuilder.logicalPlan) }.sum
       assert(cached >= 1, "no cached plan holds the extraction — guard disarmed")
+    } finally CacheRegistry.unpersistAll()
+  }
+
+  test("f12 plans spec extraction once") {
+    // scoreItems/scoreItemsWith/f12 share one extraction → scoring
+    // path: its four broadcast lookup joins must read ONE cached
+    // withSpecs frame, never a live extraction tree (the fp01 guard
+    // above, applied to the standalone scorer)
+    try {
+      val (live, cached) = extractionTrees(operators.RiskEngine.f12(spark, sf()))
+      assert(live == 0, s"f12 plans $live uncached spec-extraction tree(s)")
+      assert(cached == 1, s"f12 caches $cached extraction tree(s), want exactly one")
     } finally CacheRegistry.unpersistAll()
   }
 

@@ -1,15 +1,9 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 /** Scratch profiler for the near-dup gate (not a spec). */
 object GateProf {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.icu.caseMappings.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(32).getOrCreate()
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     spark.range(1000000).selectExpr("sum(id*2)").collect()
     // fixed scratch wiped per run — random temp dirs would accumulate

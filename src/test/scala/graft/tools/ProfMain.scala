@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Steady-state query profiler (test scope only — never ships):
   *
   *   sbt "Test/runMain graft.tools.ProfMain <query> [reps] [sfDir]"
@@ -17,12 +15,7 @@ object ProfMain {
     val name = args.headOption.getOrElse("c01_corpus_clean")
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val dir = args.lift(2).getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.icu.caseMappings.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(32).getOrCreate()
     val all = graft.SparkEntry.queries ++ graft.SparkEntry.benchOnly
     val fn = all.getOrElse(name,
       sys.error(s"unknown query $name; known: ${all.keys.toSeq.sorted.mkString(", ")}"))
