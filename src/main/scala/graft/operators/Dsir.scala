@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Data Selection via Importance Resampling (DSIR, Xie et al. 2023) —
@@ -99,10 +98,8 @@ object Dsir {
   def c12(s: SparkSession, dir: String): DataFrame = {
     val scored = importanceScores(Tables.documents(s, dir),
       col("lang") === TargetLang)
-    val top = withGumbelKey(scored, GumbelSalt)
-      .orderBy(col("key").desc, col("doc_id").asc).limit(TopK)
-    top.withColumn("rank", row_number().over(
-        Window.orderBy(col("key").desc, col("doc_id").asc)).cast("long"))
+    graft.functions.TopK.ranked(withGumbelKey(scored, GumbelSalt), TopK, "rank",
+        Seq("key" -> true, "doc_id" -> false))
       .select(col("rank"), col("doc_id"), col("score"), col("key"))
   }
 

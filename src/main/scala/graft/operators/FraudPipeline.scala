@@ -36,8 +36,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture: the chain inherits each stage's own discipline —
   * the corpus is read and spec-extracted ONCE into a cached frame
-  * consumed by both the stats and the scoring passes, so neither pass
-  * re-plans the extraction tree; stats rows are model metadata
+  * consumed by both the stats and the scoring passes, so extraction
+  * runs once per listing; stats rows are model metadata
   * (bounded by categories × conditions × components), so feeding them
   * back via the driver is the broadcast-a-model shape, not a
   * collect-the-data anti-pattern; the alert filter lands on the
@@ -65,9 +65,8 @@ object FraudPipeline {
   /** The chain from an already-landed NDJSON corpus dir: schema'd
     * ingest → spec extraction → stats generation → scoring (with
     * hidden-price correction) → alert filter. One cached specced
-    * frame feeds both passes: the scoring joins then key on cached
-    * attributes, not on aliases of the extraction tree, which Spark's
-    * partition-pruning rule would otherwise walk on every plan. */
+    * frame feeds both passes, so extraction runs once per listing and
+    * the scoring joins key on cached attributes. */
   def pipelineFrom(s: SparkSession, ndjsonDir: String,
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
     val specced = graft.functions.TextSpecs.withSpecs(

@@ -133,9 +133,8 @@ object RiskEngine {
 
   /** Extraction → scoring over one cached specced frame (the
     * FraudPipeline.pipelineFrom shape): the four broadcast lookup
-    * joins then key on cached attributes, not on aliases of the
-    * extraction tree, which Spark's partition-pruning rule would
-    * otherwise walk on every plan. */
+    * joins key on cached attributes, so extraction runs once per item
+    * and no join plan carries the extraction. */
   private def scoreItemsResolved(items: DataFrame,
       segs: Seq[SegStats], comps: Seq[CompStats]): DataFrame =
     scoreSpeccedResolved(
@@ -216,10 +215,9 @@ object RiskEngine {
       when(segValid, W("category")).otherwise(0.0)
 
     // Stage the shared big expressions as NAMED columns: the final
-    // select references finalZ/est many times, and re-inlined copies
-    // of the whole join lineage per reference blow Catalyst's
-    // optimization time from <1 s to ~30 s (same pathology as
-    // TextSpecs.withSpecs staging).
+    // select references finalZ/est many times, and CollapseProject
+    // keeps a multiply-referenced non-cheap column staged, so each is
+    // computed once per row instead of re-inlined per reference.
     val staged = df
       .withColumn("_tw", tw)
       .withColumn("_z0", when(col("_tw") > 0, wz / col("_tw")).otherwise(0.0))
@@ -467,12 +465,12 @@ object RiskEngine {
     * after routing (inside aggregateStats), so only the slim (route,
     * category, cond, price, cpu, ram, gpu) frame is materialized. A
     * caller that also scores the same items caches `specced` itself
-    * (FraudPipeline.pipelineFrom) so extraction is planned and run
-    * once. Uncached, the extraction → routing cascade is one plan:
-    * every heavy intermediate (withSpecs stages, cond, segment) is a
-    * named multi-referenced column, so CollapseProject's cheapness
-    * guard keeps the staging and the regex scans run once per row
-    * (PlanSpec pins the per-plan regex-scan ceiling). */
+    * (FraudPipeline.pipelineFrom) so extraction runs once. Uncached,
+    * extraction → routing is one plan whose heavy columns (the
+    * graft_specs struct, cond, segment) are named and multiply
+    * referenced, so CollapseProject keeps them staged and each runs
+    * once per row (PlanSpec pins one graft_specs per extraction
+    * plan). */
   def marketStatsOf(specced: DataFrame): DataFrame = {
     val s = specced.sparkSession
     aggregateStats(routeItems(specced),
@@ -496,13 +494,11 @@ object RiskEngine {
       // The JUNK drop, expressed on the RAW price column. Identical to
       // filtering `route =!= "JUNK"` afterwards (segment = JUNK iff
       // price > 10000: the price < 5 branch wins first, so no other
-      // route reaches JUNK), but a trailing filter on the computed
-      // route column is catastrophic: predicate pushdown substitutes
-      // aliases transitively with no size guard, inlining the
-      // cpu/ram/category extraction trees into one Filter expression
-      // (measured 21.9 MB optimized-plan node / 113 MB task binaries).
-      // On the raw column it pushes into the parquet scan instead —
-      // JUNK rows never leave the reader.
+      // route reaches JUNK). Filters here read raw columns only:
+      // predicate pushdown substitutes aliases transitively, so a
+      // filter on a computed column would re-evaluate extraction and
+      // routing inside the Filter, while one on the raw column pushes
+      // into the scan — JUNK rows never leave the reader.
       .filter(!coalesce(col("price") > 10000, lit(false)))
       .withColumn("cond", TextSpecs.detectConditionWithApi(
         col("api_condition"), col("is_refurbished"), rawFull))

@@ -116,9 +116,8 @@ object Search {
         count(lit(1)).as("terms_matched"))
     // top-k via TakeOrdered (total order: doc_id tiebreak), THEN rank
     // over the k survivors — never a global single-partition window
-    val top = scored.orderBy(col("score").desc, col("doc_id").asc).limit(k)
-    top.withColumn("rank", row_number().over(
-        Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
+    graft.functions.TopK.ranked(scored, k, "rank",
+      Seq("score" -> true, "doc_id" -> false))
       .select(col("rank"), col("doc_id"), col("score"), col("terms_matched"))
   }
 
@@ -267,9 +266,8 @@ object Search {
       .groupBy(col("doc_id"))
       .agg(sum(col("c").cast("decimal(25,8)")).cast("double").as("score"),
         count(lit(1)).as("terms_matched"))
-    val top = scored.orderBy(col("score").desc, col("doc_id").asc).limit(k)
-    top.withColumn("rank", row_number().over(
-        Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
+    graft.functions.TopK.ranked(scored, k, "rank",
+      Seq("score" -> true, "doc_id" -> false))
       .select(col("rank"), col("doc_id"), col("score"), col("terms_matched"))
   }
 
@@ -319,9 +317,8 @@ object Search {
     val dfreq = tf.agg(count(lit(1)).as("df"))
     val scored = tf.crossJoin(broadcast(dfreq)).crossJoin(broadcast(g))
       .select(col("doc_id"), col("tf"), bm25ScoreExpr.as("score"))
-    val top = scored.orderBy(col("score").desc, col("doc_id").asc).limit(k)
-    top.withColumn("rank", row_number().over(
-        Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
+    graft.functions.TopK.ranked(scored, k, "rank",
+      Seq("score" -> true, "doc_id" -> false))
       .select(col("rank"), col("doc_id"), col("tf"), col("score"))
   }
 
@@ -403,9 +400,8 @@ object Search {
     val vc = emb.crossJoin(broadcast(qvec))
       .select(col("vec_id").as("doc_id"),
         dcos(col("qe"), col("embedding").cast("array<double>")).as("cos"))
-    val vtop = vc.orderBy(col("cos").desc, col("doc_id").asc).limit(TopK)
-    val vr = vtop.withColumn("rank_vec", row_number().over(
-        Window.orderBy(col("cos").desc, col("doc_id").asc)).cast("long"))
+    val vr = graft.functions.TopK.ranked(vc, TopK, "rank_vec",
+        Seq("cos" -> true, "doc_id" -> false))
       .select(col("doc_id"), col("rank_vec"))
     val fused = lex.join(vr, Seq("doc_id"), "full_outer")
       .select(col("doc_id"),
@@ -414,9 +410,8 @@ object Search {
           .as("rrfraw"),
         coalesce(col("rank_lex"), lit(0L)).as("rank_lex"),
         coalesce(col("rank_vec"), lit(0L)).as("rank_vec"))
-    val top = fused.orderBy(col("rrfraw").desc, col("doc_id").asc).limit(k)
-    top.withColumn("rank", row_number().over(
-        Window.orderBy(col("rrfraw").desc, col("doc_id").asc)).cast("long"))
+    graft.functions.TopK.ranked(fused, k, "rank",
+      Seq("rrfraw" -> true, "doc_id" -> false))
       .select(col("rank"), col("doc_id"), round(col("rrfraw"), 6).as("rrf"),
         col("rank_lex"), col("rank_vec"))
   }
@@ -522,9 +517,8 @@ object Search {
       sum(dcgTerm.cast("decimal(25,8)")).cast("double").as("dcg_k"))
     val nRel = rel.agg(
       sum(when(col("rel") >= RelMin, 1L).otherwise(0L)).as("n_rel"))
-    val ideal = rel.orderBy(col("rel").desc, col("doc_id").asc).limit(k)
-      .withColumn("rk", row_number().over(
-        Window.orderBy(col("rel").desc, col("doc_id").asc)).cast("long"))
+    val ideal = graft.functions.TopK.ranked(rel, k, "rk",
+        Seq("rel" -> true, "doc_id" -> false))
       .agg(sum(dcgTerm.cast("decimal(25,8)")).cast("double").as("idcg_k"))
     head.crossJoin(nRel).crossJoin(ideal)
       .select(lit(k.toLong).as("k"), col("n_rel"), col("hits"),
@@ -849,9 +843,8 @@ object Search {
       (col("sum_dl").cast("double") / col("n_docs")).as("avgdl"))
     val scored = matched.crossJoin(broadcast(dfreq)).crossJoin(broadcast(g))
       .select(col("doc_id"), col("tf"), bm25ScoreExpr.as("score"))
-    val top = scored.orderBy(col("score").desc, col("doc_id").asc).limit(k)
-    top.withColumn("rank", row_number().over(
-        Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
+    graft.functions.TopK.ranked(scored, k, "rank",
+      Seq("score" -> true, "doc_id" -> false))
       .select(col("rank"), col("doc_id"), col("tf"), col("score"))
   }
 

@@ -162,8 +162,7 @@ object TextOps {
     // lambdas consume it: every element_at reference inside a
     // transform duplicates its subtree, and lambda-bearing trees are
     // excluded from codegen subexpression elimination — the inline
-    // formulation re-ran split() per element access (measured 28.8 s
-    // at sf0.1 vs ~2 s staged, the TextSpecs.cpuScans lesson).
+    // formulation re-ran split() per element access.
     // CollapseProject refuses to re-inline a multi-referenced
     // non-cheap producer, so `w` is computed once per row.
     val w = col("w")
@@ -771,17 +770,13 @@ object TextOps {
       (col("c_xy").cast("double") / col("n_b").cast("double")) /
         ((col("c_x").cast("double") / col("n_u").cast("double")) *
           (col("c_y").cast("double") / col("n_u").cast("double")))), 6)
-    big.filter(col("c_xy") >= minCount)
+    val scored = big.filter(col("c_xy") >= minCount)
       .join(uni.select(col("t").as("x"), col("c").as("c_x")), "x")
       .join(uni.select(col("t").as("y"), col("c").as("c_y")), "y")
       .crossJoin(broadcast(nu)).crossJoin(broadcast(nb))
       .select(col("x"), col("y"), col("c_xy"), pmi.as("pmi"))
-      .orderBy(col("pmi").desc, col("x"), col("y"))
-      .limit(topK)
-      // rank window runs over the ≤TopK-row TakeOrdered output only
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("pmi").desc, col("x"), col("y"))).cast("long"))
+    graft.functions.TopK.ranked(scored, topK, "rank",
+        Seq("pmi" -> true, "x" -> false, "y" -> false))
       .select(col("rank"), col("x"), col("y"), col("c_xy"), col("pmi"))
   }
 

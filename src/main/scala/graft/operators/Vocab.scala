@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** c17: vocabulary fitting — the census that PRODUCES the pinned
@@ -16,7 +15,7 @@ import org.apache.spark.sql.functions._
   * terms — the thing being counted — collapse map-side); the top-K
   * cut is a distributed TakeOrdered (freq desc, term asc — total
   * order, so the K boundary is deterministic), and the rank/coverage
-  * window runs on K rows only — the full vocabulary (Heaps-bounded
+  * numbering runs on K rows only — the full vocabulary (Heaps-bounded
   * but potentially huge at 100 TB) is never globally sorted.
   * Coverage shares are DECIMAL-summed (order-independent).
   */
@@ -32,12 +31,9 @@ object Vocab {
       .select(explode(split(lower(trim(col("text"))), "\\s+")).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("freq"))
     val total = freq.agg(sum(col("freq")).as("total"))
-    val top = freq.orderBy(col("freq").desc, col("term").asc).limit(k)
-    val w = Window.orderBy(col("freq").desc, col("term").asc)
-    top.crossJoin(broadcast(total))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .withColumn("cum_freq",
-        sum(col("freq")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
+    graft.functions.TopK.ranked(freq, k, "rank",
+        Seq("freq" -> true, "term" -> false), runningSum = Some("freq" -> "cum_freq"))
+      .crossJoin(broadcast(total))
       .select(col("rank"), col("term"), col("freq"),
         round(col("freq").cast("double") / col("total"), 6).as("share"),
         round(col("cum_freq").cast("double") / col("total"), 6)

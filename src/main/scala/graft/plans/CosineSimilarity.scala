@@ -88,6 +88,7 @@ object GraftFunctions {
   val BloomName = "graft_bloom_contains"
   val Sq8DotName = "graft_sq8dot"
   val DeleteVariantsName = "graft_delete_variants"
+  val SpecsName = "graft_specs"
 
   private val registry: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     (CosineName, classOf[CosineSimilarity].getName,
@@ -142,7 +143,12 @@ object GraftFunctions {
       exprs => Sq8Dot(exprs.head, exprs(1))),
     (DeleteVariantsName, classOf[DeleteVariants].getName,
       exprs => DeleteVariants(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue())))
+        exprs(1).eval().asInstanceOf[Number].intValue())),
+    // optional 3rd arg: a literal boolean selecting the RE2-safe core
+    // cascade (f11b); the 2-arg form is full-fidelity extraction
+    (SpecsName, classOf[Specs].getName,
+      exprs => Specs(exprs.head, exprs(1),
+        exprs.lengthIs >= 3 && exprs(2).eval().asInstanceOf[Boolean])))
 
   /** Register the native functions the session does not have yet.
     * Every column-API face calls this, so re-registering would replace
@@ -200,6 +206,17 @@ object GraftFunctions {
     register(spark)
     call_function(DeleteVariantsName, name,
       org.apache.spark.sql.functions.lit(maxEdits))
+  }
+
+  def specs(spark: SparkSession, title: Column, description: Column): Column = {
+    register(spark)
+    call_function(SpecsName, title, description)
+  }
+
+  def coreSpecs(spark: SparkSession, title: Column, description: Column): Column = {
+    register(spark)
+    call_function(SpecsName, title, description,
+      org.apache.spark.sql.functions.lit(true))
   }
 
   def fingerprint(spark: SparkSession, text: Column): Column = {

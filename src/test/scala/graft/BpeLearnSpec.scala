@@ -152,8 +152,7 @@ class BpeLearnSpec extends SparkSpec {
       s"expected exhaustion between the demo budget and 32k, " +
         s"got ${sampled.merges.size}")
     // artifact round-trip: persisted fit loads back exactly
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-bpe32k").toString
+    val path = scratch("graft-bpe32k")
     try {
       BpeLearn.writeFit(spark, sampled, path)
       val loaded = BpeLearn.readFit(spark, path)
@@ -234,7 +233,7 @@ class BpeLearnSpec extends SparkSpec {
 
   test("fit artifact round-trip: write + read == in-memory fit") {
     val f = BpeLearn.fit(handDocs, rounds = 5)
-    val dir = java.nio.file.Files.createTempDirectory("bpefit").toString
+    val dir = scratch("bpefit")
     BpeLearn.writeFit(spark, f, dir)
     val got = BpeLearn.readFit(spark, dir)
     assert(got.merges == f.merges)

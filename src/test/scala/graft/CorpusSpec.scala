@@ -151,7 +151,7 @@ class CorpusSpec extends SparkSpec {
 
   test("cleanStaged == clean row-for-row (the 100 TB stage boundary " +
       "changes where the intermediate lives, not the result)") {
-    val root = java.nio.file.Files.createTempDirectory("graft-c10stage")
+    val root = scratch("graft-c10stage")
     val stage = s"$root/stage"
     try {
       val inPlan = Corpus.c10(spark, sf())
@@ -164,10 +164,7 @@ class CorpusSpec extends SparkSpec {
       val fs = new java.io.File(stage)
       assert(fs.exists && fs.listFiles.exists(_.getName.endsWith(".parquet")),
         "stage dir missing materialized parquet")
-    } finally {
-      CacheRegistry.unpersistAll()
-      org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
-    }
+    } finally CacheRegistry.unpersistAll()
   }
 
   test("c08 -> clean integration: strip-first equals clean on template-free text") {

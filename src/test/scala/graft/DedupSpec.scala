@@ -297,7 +297,7 @@ class DedupSpec extends SparkSpec {
     // must catch a planted contaminated doc across the file boundary
     import org.apache.spark.sql.types._
     try {
-      val root = java.nio.file.Files.createTempDirectory("graft-decon").toString
+      val root = scratch("graft-decon")
       val evalQ = "what is the capital of the ancient river kingdom and " +
         "why did its harbors silt over during the long drought season"
       val lines = Seq(

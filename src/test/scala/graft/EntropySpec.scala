@@ -8,7 +8,7 @@ class EntropySpec extends SparkSpec {
   import spark.implicits._
 
   private def docsDir(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("tdocs").toString
+    val dir = scratch("tdocs")
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -36,7 +36,7 @@ class EntropySpec extends SparkSpec {
   }
 
   private def t09Of(rows: Seq[(Long, String)]) = {
-    val dir = java.nio.file.Files.createTempDirectory("t09").toString
+    val dir = scratch("t09")
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
       .withColumn("n_chars", length(col("text")).cast("long"))

@@ -61,8 +61,7 @@ class FoldLatticeSpec extends SparkSpec {
 
   private def runScenario(seed: Int, fpbPartitioned: Boolean): Unit = {
     val ops = opsGen.pureApply(Gen.Parameters.default, rng.Seed(seed.toLong))
-    val root = java.nio.file.Files
-      .createTempDirectory(s"graft-foldprop$seed").toString
+    val root = scratch(s"graft-foldprop$seed")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(root).getFileSystem(conf)
     val rnd = new scala.util.Random(seed)

@@ -27,8 +27,7 @@ class FraudModelSpec extends SparkSpec {
     // the exact same scoring function (cluster-deployable artifact)
     val f = FraudModel.features(spark, sf("sf0.001"))
     val model = FraudModel.pipeline().fit(f)
-    val path = java.nio.file.Files.createTempDirectory("graft-model")
-      .resolve("fraud-lr").toString
+    val path = s"${scratch("graft-model")}/fraud-lr"
     model.write.overwrite().save(path)
     val loaded = org.apache.spark.ml.PipelineModel.load(path)
     val want = model.transform(f).select("p_partkey", "prediction", "probability")
@@ -65,8 +64,7 @@ class FraudModelSpec extends SparkSpec {
 
   test("model artifact lifecycle: write -> read -> scoreCore equals " +
       "the literal serving path row-for-row (order preserved)") {
-    val path = java.nio.file.Files.createTempDirectory("graft-ml01b")
-      .resolve("model").toString
+    val path = s"${scratch("graft-ml01b")}/model"
     FraudModel.writeModel(spark, path,
       FraudModel.Ml01Intercept, FraudModel.Ml01Coefs)
     val (icept, coefs) = FraudModel.readModel(spark, path)

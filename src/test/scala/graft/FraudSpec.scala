@@ -125,4 +125,31 @@ class FraudSpec extends SparkSpec {
       List("\"wallapay\""), // colon content
       List("New User (<48h)", "Some novel factor"))) // mapped + fallback
   }
+
+  test("a RAM mention too long for an int is dropped, not a failed query") {
+    // the reference int()s the digits and then rejects sizes outside
+    // ValidRamSizes; under ANSI a plain cast of "99999999999" aborted
+    // the whole extraction (and with it a poll cycle)
+    import graft.functions.TextSpecs
+    import graft.operators.RiskEngine
+    val items = Seq(
+      (1L, "portatil 99999999999gb ram", "16gb", 300.0),
+      (2L, "portatil 8gb", "99999999999 gb de ram", 250.0),
+      (3L, "portatil 16gb", "buen estado", 400.0),
+      (4L, "portatil 16gb", "buen estado", 420.0))
+      .toDF("item_id", "title", "description", "price")
+    def ram(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.orderBy("item_id").select("ram").as[String].collect().toSeq
+    assert(ram(TextSpecs.withSpecs(items, col("title"), col("description"))) ==
+      Seq("16GB", "8GB", "16GB", "16GB"))
+    assert(ram(TextSpecs.coreSpecs(items, col("title"), col("description"))) ==
+      Seq("16GB", "8GB", "16GB", "16GB"))
+    val re2 = items.select(TextSpecs.ramFromScan(TextSpecs.ramScanRe2(
+      lower(col("title")), lit(128))).as("ram"))
+    assert(re2.as[String].collect().toSeq == Seq(null, "8GB", "16GB", "16GB"))
+    try {
+      val stats = RiskEngine.generateMarketStats(items)
+      assert(stats.count() > 0)
+    } finally CacheRegistry.unpersistAll()
+  }
 }

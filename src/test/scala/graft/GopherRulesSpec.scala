@@ -64,12 +64,12 @@ class GopherRulesSpec extends SparkSpec {
     val noStops = Seq.fill(60)("zebra").mkString(" ")
     val batch = Seq(1L -> clean, 2L -> noStops).toDF("doc_id", "text")
     // control: ungated ingest accepts both
-    val ctrl = java.nio.file.Files.createTempDirectory("graft-gq-ctrl").toString
+    val ctrl = scratch("graft-gq-ctrl")
     streaming.Ingest.gateBatch(batch, 0L, s"$ctrl/docs", s"$ctrl/fp")
     assert(spark.read.parquet(s"$ctrl/docs").select("doc_id").as[Long]
       .collect().toSet == Set(1L, 2L))
     // gated: the violator is dropped, its fingerprints never written
-    val root = java.nio.file.Files.createTempDirectory("graft-gq").toString
+    val root = scratch("graft-gq")
     val n = streaming.Ingest.gateBatch(batch, 0L, s"$root/docs",
       s"$root/fp", gopherGate = true)
     assert(n == 1L)

@@ -60,7 +60,7 @@ class IncrementalStatsSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft-incstats").toString
+    val tmp = scratch("graft-incstats")
     val (stateDir, statsDir, ckpt) =
       (s"$tmp/state", s"$tmp/stats", s"$tmp/ckpt")
 

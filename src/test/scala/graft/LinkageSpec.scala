@@ -250,7 +250,7 @@ class LinkageSpec extends SparkSpec
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, String, Long, Long)] =
       df.select("key", "match_key", "match_name", "dist", "n_candidates")
         .as[(Long, Long, String, Long, Long)].collect().toSet
-    val root = java.nio.file.Files.createTempDirectory("linkgate").toString
+    val root = scratch("linkgate")
     Linkage.linkageBatch(b1, 0L, root)
     Linkage.linkageBatch(b2, 1L, root)
     val alerts = Linkage.readLinkageAlerts(spark, root)
@@ -272,8 +272,8 @@ class LinkageSpec extends SparkSpec
     assert((rows(after), after.count(),
       spark.read.parquet(s"$root/state").count()) == before)
     // and a REAL writeStream over MemoryStream lands the same alerts
-    val root2 = java.nio.file.Files.createTempDirectory("linkgate2").toString
-    val ckp = java.nio.file.Files.createTempDirectory("linkckp").toString
+    val root2 = scratch("linkgate2")
+    val ckp = scratch("linkckp")
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String, Long)]
     val q = Linkage.maintainLinkage(
@@ -300,8 +300,8 @@ class LinkageSpec extends SparkSpec
         col("match_name"), col("dist"))
         .as[(Long, Long, Long, String, Long)].collect().toSet
     // broadcast (default: tiny batches) vs pinned shuffle path
-    val rootB = java.nio.file.Files.createTempDirectory("linkgate-b").toString
-    val rootS = java.nio.file.Files.createTempDirectory("linkgate-s").toString
+    val rootB = scratch("linkgate-b")
+    val rootS = scratch("linkgate-s")
     Seq(b1, b2).zipWithIndex.foreach { case (b, i) =>
       Linkage.linkageBatch(b, i.toLong, rootB)
       Linkage.linkageBatch(b, i.toLong, rootS, probeBroadcastRows = 0L)
@@ -345,7 +345,7 @@ class LinkageSpec extends SparkSpec
         .delete(path, true)
     }
     // reference: the uninterrupted gate
-    val ref = java.nio.file.Files.createTempDirectory("linkgate-ref").toString
+    val ref = scratch("linkgate-ref")
     Seq(b1, b2, b3).zipWithIndex.foreach { case (b, i) =>
       Linkage.linkageBatch(b, i.toLong, ref)
     }
@@ -353,7 +353,7 @@ class LinkageSpec extends SparkSpec
     // deleting the WHOLE varstate tree; batch 2 must still see the
     // accumulated state (key 11 links to state key 10) and the index
     // must be rebuilt for the missing levels
-    val leg = java.nio.file.Files.createTempDirectory("linkgate-leg").toString
+    val leg = scratch("linkgate-leg")
     Linkage.linkageBatch(b1, 0L, leg)
     Linkage.linkageBatch(b2, 1L, leg)
     rm(s"$leg/varstate")
@@ -387,7 +387,7 @@ class LinkageSpec extends SparkSpec
       path.getFileSystem(conf).delete(path, true)
     }
     // reference: the uninterrupted flat gate
-    val ref = java.nio.file.Files.createTempDirectory("linkgate-flatref").toString
+    val ref = scratch("linkgate-flatref")
     Seq(b1, b2, b3).zipWithIndex.foreach { case (b, i) =>
       Linkage.linkageBatch(b, i.toLong, ref)
     }
@@ -395,7 +395,7 @@ class LinkageSpec extends SparkSpec
     // pre-r18 way — block=* subdirs, key+name-only data files —
     // exactly what a pre-r18 gate left on disk (mixing that depth
     // with one flat r18 level breaks whole-tree partition discovery)
-    val leg = java.nio.file.Files.createTempDirectory("linkgate-blk").toString
+    val leg = scratch("linkgate-blk")
     Linkage.linkageBatch(b1, 0L, leg)
     Linkage.linkageBatch(b2, 1L, leg)
     Seq(0L, 1L).foreach { b =>
@@ -451,8 +451,8 @@ class LinkageSpec extends SparkSpec
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select(col("batch"), col("key"), col("match_key"), col("dist"))
         .as[(Long, Long, Long, Long)].collect().toSet
-    val rootT = java.nio.file.Files.createTempDirectory("linkgate-rr-t").toString
-    val rootS = java.nio.file.Files.createTempDirectory("linkgate-rr-s").toString
+    val rootT = scratch("linkgate-rr-t")
+    val rootS = scratch("linkgate-rr-s")
     Seq(b1, b2).zipWithIndex.foreach { case (b, i) =>
       Linkage.linkageBatch(b, i.toLong, rootT)
       Linkage.linkageBatch(b, i.toLong, rootS, probeBroadcastRows = 0L)
@@ -469,7 +469,7 @@ class LinkageSpec extends SparkSpec
   test("41s gate: an empty first trigger doesn't poison the state read") {
     // regression: an empty batch writes a file-less state level; the
     // next trigger's state read must not die on schema inference
-    val root = java.nio.file.Files.createTempDirectory("linkgate-e").toString
+    val root = scratch("linkgate-e")
     val empty = Seq.empty[(Long, String, Long)]
       .toDF("key", "name", "block")
     Linkage.linkageBatch(empty, 0L, root)

@@ -39,7 +39,7 @@ class PathsSpec extends SparkSpec {
       .map { case (id, u, t, us) =>
         (id, u, t, 0.0, new java.sql.Timestamp(us / 1000)) }
       .toDF("event_id", "user_id", "event_type", "value", "ts")
-    val tmp = java.nio.file.Files.createTempDirectory("paths").toString
+    val tmp = scratch("paths")
     ev.write.parquet(s"$tmp/events.parquet")
     val got = Paths.q28(spark, tmp)
       .as[(String, Long, Double)].collect().map(r => r._1 -> r._2).toMap

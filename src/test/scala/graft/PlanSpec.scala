@@ -9,26 +9,24 @@ class PlanSpec extends SparkSpec {
     SparkEntry.queries(name)(spark, sf("sf0.001"))
       .queryExecution.executedPlan.toString
 
-  /** Spec-extraction trees in a plan, counted by withSpecs' one
-    * ArrayAggregate (its spam-truncation fold). `foreach` never
-    * descends into an InMemoryRelation's cached plan, so on an
-    * optimized plan this counts the LIVE trees only. */
-  private def extractionFolds(
+  /** Spec extractions in a plan: its `graft_specs` calls. `foreach`
+    * never descends into an InMemoryRelation's cached plan, so on an
+    * optimized plan this counts the LIVE extractions only. */
+  private def extractions(
       p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int = {
-    import org.apache.spark.sql.catalyst.expressions.ArrayAggregate
     var n = 0
     p.foreach { node =>
-      node.expressions.foreach(e => n += e.collect { case a: ArrayAggregate => a }.size)
+      node.expressions.foreach(e => n += e.collect { case x: graft.plans.Specs => x }.size)
     }
     n
   }
 
-  /** (live, cached) extraction trees in a face's optimized plan. */
+  /** (live, cached) spec extractions in a face's optimized plan. */
   private def extractionTrees(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
     val opt = df.queryExecution.optimizedPlan
-    (extractionFolds(opt), opt.collect {
-      case r: InMemoryRelation => extractionFolds(r.cacheBuilder.logicalPlan)
+    (extractions(opt), opt.collect {
+      case r: InMemoryRelation => extractions(r.cacheBuilder.logicalPlan)
     }.sum)
   }
 
@@ -245,22 +243,19 @@ class PlanSpec extends SparkSpec {
 
   test("c10 staged: the cascade reads the STAGE parquet, and no text " +
       "column rides an in-memory cache") {
-    val root = java.nio.file.Files.createTempDirectory("graft-planstage")
-    try {
-      val p = graft.operators.Corpus
-        .c10Staged(spark, sf("sf0.001"), s"$root/stage")
-        .queryExecution.executedPlan.toString
-      // the staged posture: pre-stage output consumed as a columnar
-      // file scan of the stage dir
-      assert(p.contains("planstage"), "cascade is not reading the stage dir")
-      // the only caches in the staged plan are the slim scored frame
-      // (doc_id, pred_lang, quality) — assert no InMemory scan carries
-      // the text column
-      val cached = p.split("\n").filter(_.contains("InMemoryTableScan"))
-      assert(cached.forall(!_.contains("text")),
-        "a text-bearing cache survived in the staged plan")
-    } finally
-      org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+    val root = scratch("graft-planstage")
+    val p = graft.operators.Corpus
+      .c10Staged(spark, sf("sf0.001"), s"$root/stage")
+      .queryExecution.executedPlan.toString
+    // the staged posture: pre-stage output consumed as a columnar
+    // file scan of the stage dir
+    assert(p.contains("planstage"), "cascade is not reading the stage dir")
+    // the only caches in the staged plan are the slim scored frame
+    // (doc_id, pred_lang, quality) — assert no InMemory scan carries
+    // the text column
+    val cached = p.split("\n").filter(_.contains("InMemoryTableScan"))
+    assert(cached.forall(!_.contains("text")),
+      "a text-bearing cache survived in the staged plan")
   }
 
   test("all native functions are SQL-callable after registration") {
@@ -272,7 +267,9 @@ class PlanSpec extends SparkSpec {
          graft_shingles('a b c d', 3) AS g,
          graft_dot(array(3.0F, 4.0F), array(2.0F, 1.0F)) AS d,
          graft_textstats('the cat and the hat').en AS ts_en,
-         graft_subword_count('the table dup') AS sw""").head()
+         graft_subword_count('the table dup') AS sw,
+         graft_specs('macbook pro m2 16gb', 'nuevo').cpu AS sp_cpu,
+         graft_specs('portatil 16gb', '512gb ssd', true).ram AS sp_ram""").head()
     assert(math.abs(r.getDouble(0) - 1.0) < 1e-12)
     assert(r.getDouble(4) == 10.0)
     assert(r.getLong(1) == graft.plans.SimHash64.compute(
@@ -281,6 +278,8 @@ class PlanSpec extends SparkSpec {
     assert(r.getSeq[String](3) == Seq("a b c", "b c d"))
     assert(r.getInt(5) == 2) // distinct hits: "the", "and"
     assert(r.getLong(6) == 4L) // the(1) + tab/##le(2) + [UNK](1)
+    assert(r.getString(7) == "APPLE M2")
+    assert(r.getString(8) == "16GB") // the RE2 twin drops the ssd size
   }
 
   test("native functions register once: later calls keep the first registration") {
@@ -298,29 +297,25 @@ class PlanSpec extends SparkSpec {
       "graft_pyround was registered again")
   }
 
-  test("extraction plan keeps regex scans staged (no tree re-duplication)") {
-    // The scan-staging split holds the optimized plan at ~14
-    // regexp_extract_all occurrences; before staging, subtree
-    // duplication inflated it to 80 (each re-evaluated per row). Guard
-    // the ceiling so a refactor can't silently reintroduce the blowup.
+  test("extraction plan holds exactly one graft_specs") {
+    // The five spec columns read ONE staged graft_specs column. If
+    // CollapseProject inlined it into each field, or a caller rebuilt
+    // the extraction per column, the plan would hold (and run) several.
     import org.apache.spark.sql.functions.col
     val items = operators.RiskEngine.f12Items(spark, sf())
-    val opt = graft.functions.TextSpecs
-      .withSpecs(items, col("title"), col("description"))
-      .queryExecution.optimizedPlan
-    var total = 0
-    opt.foreach { node =>
-      total += "regexp_extract_all".r
-        .findAllIn(node.expressions.map(_.toString).mkString).length
-    }
-    assert(total <= 20, s"extraction plan holds $total regex scans — staging regressed")
+    Seq(
+      graft.functions.TextSpecs.withSpecs(items, col("title"), col("description")),
+      graft.functions.TextSpecs.coreSpecs(items, col("title"), col("description")))
+      .foreach { df =>
+        val n = extractions(df.queryExecution.optimizedPlan)
+        assert(n == 1, s"extraction plan holds $n graft_specs calls, want exactly one")
+      }
   }
 
   test("fp01 plans spec extraction once, inside the specced cache") {
     // Stats and scoring both read ONE cached withSpecs frame. A second,
-    // uncached extraction would put withSpecs' spam-truncation fold
-    // (its one ArrayAggregate) back into the live plan, where the
-    // scoring joins key on aliases of the whole extraction tree.
+    // uncached extraction would put a graft_specs call back into the
+    // live plan, where the scoring joins key on its aliases.
     try {
       val (live, cached) = extractionTrees(operators.FraudPipeline.fp01(spark, sf()))
       assert(live == 0, s"fp01 plans $live uncached spec-extraction tree(s)")

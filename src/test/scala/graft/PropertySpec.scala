@@ -168,6 +168,84 @@ class PropertySpec extends SparkSpec {
     assert(graft.plans.TextStats.QualityWords.toSeq == TextAnalysis.QualityStopwords)
   }
 
+  test("native graft_specs equals the staged Column formulation on adversarial text") {
+    // full and core extraction against the staged Column reference
+    // (StagedSpecs): nulls and empties, CRLF and blank lines, spam lines
+    // at exactly 3 and 4 keyword hits, m.2/M2 sanitization, the RAM
+    // storage lookahead, core-prefixed vs bare Intel models, Ryzen and
+    // Apple M suffixes, descriptions past the 400-code-point cap with
+    // supplementary characters across the cut, ICU case mappings, and
+    // every category rule and priority branch
+    val rnd = new Random(41)
+    val words = Array("portatil", "laptop", "MacBook", "mac air", "mac pro", "imac",
+      "macos", "apple", "chromebook", "chrome", "surface", "microsoft surface",
+      "thinkpad", "latitude", "precision", "zbook", "quadro", "xps", "spectre",
+      "zenbook", "gram", "yoga", "gaming", "gamer", "rog", "msi", "razer",
+      "intel", "amd", "qualcomm", "microsoft", "core i7", "core-i5", "corei9",
+      "i7", "I5", "i3", "ryzen 7", "Ryzen-5", "ryzen9", "m1", "M2 Pro", "m3  max",
+      "m2\tultra", "m1 max", "celeron", "pentium", "atom", "xeon", "snapdragon",
+      "sq2", "rtx 4070", "RTX3060ti", "gtx-1650", "rx 580", "rx5700xt",
+      "GTX 1080 Ti", "nvidia", "geforce", "radeon", "16gb", "8 GB", "32gb ram",
+      "512 gb ssd", "1000gb hdd", "16gb de nvme", "8gb, 512gb - ssd",
+      "64gb / hdd", "24 gigas", "13gb", "48gb", "016gb", "128gb",
+      "99999999999gb", "ssd m.2", "SSD M2", "m.2 ssd", "M2 nvme", "disco m2",
+      "m.2 sata", "nuevo", "precintado", "sin abrir", "como nuevo", "impecable",
+      "roto", "no enciende", "para piezas", "read", "new", "garantia",
+      "refurbished", "sin uso", "İstanbul", "\u212A", "ΣΟΦΟΣ", "ǅ", "ß",
+      "ﬁ", "İ7", "𝔘𝔫𝔦", "🙂", "x", "")
+    val seps = Array(" ", " ", " ", "\n", "\r\n", "\n\n", "\t", ", ")
+    def phrase(n: Int): String =
+      (0 until n).map(_ => words(rnd.nextInt(words.length)))
+        .mkString(seps(rnd.nextInt(seps.length)))
+    val spam3 = "rtx gtx amd en oferta"
+    val spam4 = "RTX gtx amd Intel barato"
+    val long = (0 until 3).map(k => ("a" * (396 + k)) + "🙂🙂 16gb i7 rtx 3060 roto")
+    val fixed: Seq[(String, String)] = Seq(
+      (null, null), (null, "i7 16gb nuevo"), ("portatil i7", null), ("", ""),
+      ("chromebook i7 32gb", "celeron"), ("chromebook i7", "pentium 8gb"),
+      ("surface 48gb", ""), ("macbook amd", ""), ("laptop amd", "macos"),
+      ("laptop", "macbook m2"), ("xps 64gb", ""), ("portatil", "quadro"),
+      ("portatil", "gaming"), ("portatil rtx 4070", "thinkpad"),
+      ("thinkpad ssd m.2", "intel core i5"), ("portatil m2 pro", "intel"),
+      ("portatil 99999999999gb ram", "99999999999 gb 16gb"),
+      ("laptop", s"linea uno\r\n$spam3\r\n16gb"), ("laptop", s"ok\n$spam4\n16gb"),
+      ("laptop", s"$spam4\n16gb"), ("laptop", "\n\n8gb\n"), ("ΣΟΦΟΣ", "İ7 K")) ++
+      long.map(d => ("portatil", d))
+    val random = (1 to 300).map { _ =>
+      val title = if (rnd.nextInt(20) == 0) null else phrase(rnd.nextInt(7))
+      val desc = rnd.nextInt(20) match {
+        case 0 => null
+        case 1 => ("b" * (390 + rnd.nextInt(12))) + "🙂" + phrase(4)
+        case _ => (0 until rnd.nextInt(5)).map(_ => rnd.nextInt(6) match {
+          case 0 => spam3; case 1 => spam4; case _ => phrase(1 + rnd.nextInt(6))
+        }).mkString(if (rnd.nextBoolean()) "\n" else "\r\n")
+      }
+      (title, desc)
+    }
+    val texts = fixed ++ random
+    val df = texts.zipWithIndex.map { case ((t, d), i) => (i.toLong, t, d) }
+      .toDF("id", "title", "description")
+    def rows(out: org.apache.spark.sql.DataFrame) =
+      out.select("id", "cpu", "ram", "gpu", "category", "condition").collect()
+        .map(r => r.getLong(0) -> r.toSeq.tail).sortBy(_._1)
+    Seq(
+      ("full", graft.functions.TextSpecs.withSpecs _, StagedSpecs.withSpecs _),
+      ("core", graft.functions.TextSpecs.coreSpecs _, StagedSpecs.coreSpecs _))
+      .foreach { case (mode, native, staged) =>
+        val n = native(df, col("title"), col("description"))
+        val s = staged(df, col("title"), col("description"))
+        assert(n.columns.toSeq == s.columns.toSeq, s"$mode: output columns differ")
+        rows(n).zip(rows(s)).foreach { case ((i, a), (_, b)) =>
+          assert(a == b, s"$mode row $i: native=$a staged=$b text=${texts(i.toInt)}")
+        }
+      }
+    // every category the rule table names is produced at least once
+    val cats = rows(graft.functions.TextSpecs.withSpecs(df, col("title"), col("description")))
+      .map(_._2(3)).toSet
+    assert(cats == Set("APPLE", "SURFACE", "WORKSTATION", "PREMIUM_ULTRABOOK",
+      "GAMING", "CHROMEBOOK", "GENERICO"), s"categories seen: $cats")
+  }
+
   test("rare+hot df-cap decomposition stays exact over random corpora and caps") {
     // the capped pair queries promise: reported rows are a subset of
     // the exhaustive rows, every reported value is the EXACT full

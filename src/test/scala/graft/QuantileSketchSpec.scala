@@ -71,7 +71,7 @@ class QuantileSketchSpec extends SparkSpec {
   test("streaming maintenance: fold == recompute, replay rebuilds identically") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-qsk").toString
+    val root = scratch("graft-qsk")
     val (stateDir, outDir, ckpt) = (s"$root/state", s"$root/out", s"$root/ckpt")
     val input = MemoryStream[(String, Double)]
     val stream = input.toDF().toDF("k", "v")

@@ -75,7 +75,7 @@ class SearchSpec extends SparkSpec
   test("s06 lexicon: artifact round-trip scores identically; merge == refit") {
     import graft.operators.Search
     val docs = Tables.documents(spark, sf())
-    val dir = java.nio.file.Files.createTempDirectory("graft-lex").toString
+    val dir = scratch("graft-lex")
     try {
       Search.writeLexicon(Search.fitLexicon(docs), dir)
       val fromArtifact = Search.bm25WithLexicon(docs, Search.QueryTerms,
@@ -164,7 +164,7 @@ class SearchSpec extends SparkSpec
 
   test("s15: the postings artifact serves s06's exact rows; pruned read") {
     val docs = graft.Tables.documents(spark, sf("sf0.001"))
-    val dir = java.nio.file.Files.createTempDirectory("bm25idx").toString
+    val dir = scratch("bm25idx")
     Search.writeBm25Index(docs, dir)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Double, Long)].collect().toSeq
@@ -196,8 +196,8 @@ class SearchSpec extends SparkSpec
       .transform(graft.CacheRegistry.register)
     val half0 = docs.filter(col("doc_id") % 2 === 0)
     val half1 = docs.filter(col("doc_id") % 2 === 1)
-    val inc = java.nio.file.Files.createTempDirectory("bm25inc").toString
-    val full = java.nio.file.Files.createTempDirectory("bm25full").toString
+    val inc = scratch("bm25inc")
+    val full = scratch("bm25full")
     Search.writeBm25Index(half0, inc)
     Search.appendBm25Index(half1, spark, inc)
     Search.writeBm25Index(docs, full)
@@ -219,10 +219,10 @@ class SearchSpec extends SparkSpec
     val docs = graft.Tables.documents(spark, sf("sf0.001"))
       .transform(graft.CacheRegistry.register)
     // a maintained (batched) index: postings live at batch=id/bucket=N
-    val maintained = java.nio.file.Files.createTempDirectory("bm25b").toString
+    val maintained = scratch("bm25b")
     Search.indexBatch(docs, 0L, maintained)
     // a static index: flat bucket=N
-    val static0 = java.nio.file.Files.createTempDirectory("bm25s").toString
+    val static0 = scratch("bm25s")
     Search.writeBm25Index(docs, static0)
     // static append onto the maintained artifact: would nest bucket=N
     // beside batch=id/ under one root → every later read throws on
@@ -247,7 +247,7 @@ class SearchSpec extends SparkSpec
   test("s16: phrase-from-positions == the corpus-scan s08, and overlapping " +
       "occurrences count") {
     val docs = graft.Tables.documents(spark, sf("sf0.001"))
-    val dir = java.nio.file.Files.createTempDirectory("phraseidx").toString
+    val dir = scratch("phraseidx")
     Search.writeBm25Index(docs, dir, positions = true)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Long, Double)].collect().toSeq
@@ -263,7 +263,7 @@ class SearchSpec extends SparkSpec
       (3L, "a a a"),                     // dup-term probe corpus
       (4L, "hash join"))                 // tf 1, shortest doc
       .toDF("doc_id", "text")
-    val pdir = java.nio.file.Files.createTempDirectory("phraseidx2").toString
+    val pdir = scratch("phraseidx2")
     Search.writeBm25Index(planted, pdir, positions = true)
     val hj = Search.queryPhraseIndex(spark, pdir, Seq("hash", "join"))
       .select("doc_id", "tf").as[(Long, Long)].collect().toMap
@@ -272,7 +272,7 @@ class SearchSpec extends SparkSpec
       .select("doc_id", "tf").as[(Long, Long)].collect().toMap
     assert(aa == Map(3L -> 2L))
     // a match-only (no-positions) index refuses phrase service loudly
-    val mdir = java.nio.file.Files.createTempDirectory("matchonly").toString
+    val mdir = scratch("matchonly")
     Search.writeBm25Index(planted, mdir)
     val err = intercept[IllegalArgumentException] {
       Search.queryPhraseIndex(spark, mdir, Seq("hash", "join"))
@@ -287,8 +287,8 @@ class SearchSpec extends SparkSpec
       .transform(graft.CacheRegistry.register)
     val half0 = docs.filter(col("doc_id") % 2 === 0)
     val half1 = docs.filter(col("doc_id") % 2 === 1)
-    val m = java.nio.file.Files.createTempDirectory("bm25maint").toString
-    val full = java.nio.file.Files.createTempDirectory("bm25stat").toString
+    val m = scratch("bm25maint")
+    val full = scratch("bm25stat")
     Search.writeBm25Index(docs, full, positions = true)
     def served(p: String) =
       (Search.queryBm25Index(spark, p, Search.QueryTerms)
@@ -303,8 +303,8 @@ class SearchSpec extends SparkSpec
     Search.indexBatch(half1, 1L, m, positions = true)
     assert(served(m) == served(full))
     // and the real stream drives the same path
-    val s2 = java.nio.file.Files.createTempDirectory("bm25maint2").toString
-    val ckp = java.nio.file.Files.createTempDirectory("bm25ckp").toString
+    val s2 = scratch("bm25maint2")
+    val ckp = scratch("bm25ckp")
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
     val q = Search.maintainBm25Index(

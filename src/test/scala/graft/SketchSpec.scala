@@ -71,7 +71,7 @@ class SketchSpec extends SparkSpec {
   }
 
   test("register artifact round-trip scores identically; merge-of-halves == full refit") {
-    val root = java.nio.file.Files.createTempDirectory("graft-hll").toString
+    val root = scratch("graft-hll")
     val a = (1 to 800).map(i => ("g", s"a_$i")).toDF("source", "term")
     val b = (400 to 1200).map(i => ("g", s"a_$i")).toDF("source", "term")
     val full = Sketch.fitRegisters(a.unionAll(b))
@@ -90,7 +90,7 @@ class SketchSpec extends SparkSpec {
   test("streaming maintenance: fold == recompute, replay rebuilds identically") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-hllstream").toString
+    val root = scratch("graft-hllstream")
     val (stateDir, outDir, ckpt) = (s"$root/state", s"$root/out", s"$root/ckpt")
     val input = MemoryStream[(String, String)]
     val stream = input.toDF().toDF("source", "term")
@@ -140,7 +140,7 @@ class SketchSpec extends SparkSpec {
   test("streaming cms: folded state == batch fit over everything seen") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-cmsstream").toString
+    val root = scratch("graft-cmsstream")
     val input = MemoryStream[String]
     val stream = input.toDF().toDF("key")
     val b0 = (1 to 500).map(i => s"k_${i % 90}")

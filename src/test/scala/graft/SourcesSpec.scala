@@ -12,7 +12,7 @@ class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-sources").toString
+    scratch("graft-sources")
 
   private val schema = StructType(Seq(
     StructField("id", LongType), StructField("name", StringType),
@@ -281,7 +281,7 @@ class SourcesSpec extends SparkSpec {
 
   test("binaryFile media ingest feeds the dHash pipeline end-to-end") {
     import graft.multimodal.Binary
-    val dir = java.nio.file.Files.createTempDirectory("media").toFile
+    val dir = new java.io.File(scratch("media"))
     // three real BMPs + one decoy the glob must skip
     Seq(3L, 6L, 9L).foreach { id =>
       java.nio.file.Files.write(

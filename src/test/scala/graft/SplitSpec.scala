@@ -35,7 +35,7 @@ class SplitSpec extends SparkSpec {
   }
 
   test("c09: writeTrainingShards lifecycle — manifest matches data, rerun idempotent") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-shards").toString
+    val dir = scratch("graft-shards")
     val seqs = Split.shuffleSequences(
       Split.sequenceFrame(Split.packChunks(Tables.documents(spark, sf()))))
     Split.writeTrainingShards(seqs, dir, targetBytes = 4L << 20)

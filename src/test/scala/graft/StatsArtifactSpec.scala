@@ -17,7 +17,7 @@ import graft.operators.RiskEngine
 class StatsArtifactSpec extends SparkSpec {
 
   private def tmpPath(name: String): String =
-    java.nio.file.Files.createTempDirectory("graft-stats").resolve(name).toString
+    s"${scratch("graft-stats")}/$name"
 
   test("round-trip: loadStats(write(generate(x))) == statsFromRows(generate(x))") {
     val rows = RiskEngine.aggregateStats(

@@ -123,8 +123,7 @@ class StreamingAlertRuleSpec extends SparkSpec {
     // seals), then the read-back must equal the batch face and the
     // layout must show sealed segments + a monotonic counter.
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-alertsink").toString
+    val root = scratch("graft-alertsink")
     val table = s"$root/alerts"
     val scored = Alerts.scoredEvents(spark, sf("sf0.001"))
       .as[(Timestamp, Int)].collect().sortBy(_._1.getTime)

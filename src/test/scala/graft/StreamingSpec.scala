@@ -124,7 +124,7 @@ class StreamingSpec extends SparkSpec {
 
   test("file-source end-to-end: NDJSON stream → alert rule → parquet sink") {
     import org.apache.spark.sql.types._
-    val root = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val root = scratch("graft-stream")
     val inDir = s"$root/in"; val outDir = s"$root/out"; val ckDir = s"$root/ck"
     new java.io.File(inDir).mkdirs()
     // one NDJSON micro-batch file, the bulk_ingest shape
@@ -156,7 +156,7 @@ class StreamingSpec extends SparkSpec {
 
   test("checkpointed ingest: kill + resume continues exactly-once, dups dropped") {
     import org.apache.spark.sql.types._
-    val root = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val root = scratch("graft-ckpt")
     val inDir = s"$root/in"; val outDir = s"$root/out"; val ckDir = s"$root/ck"
     new java.io.File(inDir).mkdirs()
     val schema = StructType(Seq(
@@ -192,7 +192,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming near-dup gate: later-batch near-duplicate dropped, replay idempotent") {
     import org.apache.spark.sql.types._
-    val root = java.nio.file.Files.createTempDirectory("graft-ndgate").toString
+    val root = scratch("graft-ndgate")
     val inDir = s"$root/in"; val docsDir = s"$root/docs"
     val fpDir = s"$root/fp"; val ckDir = s"$root/ck"
     new java.io.File(inDir).mkdirs()
@@ -283,7 +283,7 @@ class StreamingSpec extends SparkSpec {
       Seq(6L -> s"$baseA yet again", 7L -> s"$novelC addendum",
         8L -> "entirely fresh treatise on fermentation chemistry in abandoned lighthouse pantries across the baltic coast"))
     def run(maintainAfter: Option[Long]): (String, String, Seq[Long]) = {
-      val root = java.nio.file.Files.createTempDirectory("graft-ndinc").toString
+      val root = scratch("graft-ndinc")
       val docsDir = s"$root/docs"; val fpDir = s"$root/fp"
       batches.zipWithIndex.foreach { case (rows, id) =>
         streaming.Ingest.gateBatch(rows.toDF("doc_id", "text"), id.toLong,
@@ -381,7 +381,7 @@ class StreamingSpec extends SparkSpec {
       "ledger of unclaimed freight at the northern railway terminus",
       "almanac of comet sightings compiled by lighthouse keepers")
     for (trial <- 1 to 2) {
-      val root = java.nio.file.Files.createTempDirectory(s"graft-ndprop$trial").toString
+      val root = scratch(s"graft-ndprop$trial")
       val docsDir = s"$root/docs"; val fpDir = s"$root/fp"
       var nextId = 1L
       var accepted = Vector.empty[(Long, String)] // candidates for later near-dups
@@ -428,7 +428,7 @@ class StreamingSpec extends SparkSpec {
     val base = "the quick brown fox jumps over the lazy dog while seventeen " +
       "green parrots recite astonishing poetry about distant nebulae and forgotten harbors"
     def freshState(): (String, String) = {
-      val root = java.nio.file.Files.createTempDirectory("graft-ndcrash").toString
+      val root = scratch("graft-ndcrash")
       val docsDir = s"$root/docs"; val fpDir = s"$root/fp"
       streaming.Ingest.gateBatch(Seq(1L -> base,
         2L -> "unrelated inventory ledger rows describing turnip futures")
@@ -474,7 +474,7 @@ class StreamingSpec extends SparkSpec {
       assert(unc == Set(9L), "uncapped gate should drop the near-dup")
       // 3. a flat (non-fpb-bucketed) state layout fails fast instead of
       // null-filtering every corpus row into silent accept-everything
-      val flatRoot = java.nio.file.Files.createTempDirectory("graft-ndflat").toString
+      val flatRoot = scratch("graft-ndflat")
       val flatFp = s"$flatRoot/fp"
       operators.Dedup.winnowFps(Seq(1L -> base).toDF("doc_id", "text"))
         .write.parquet(s"$flatFp/batch=0")
@@ -532,7 +532,7 @@ class StreamingSpec extends SparkSpec {
       case _ => Seq((10L + i) -> texts(i))
     }
     def run(fold: Boolean): (String, String, Seq[Long]) = {
-      val root = java.nio.file.Files.createTempDirectory("graft-ndfold").toString
+      val root = scratch("graft-ndfold")
       val docsDir = s"$root/docs"; val fpDir = s"$root/fp"
       (0 until 11).foreach { i =>
         streaming.Ingest.gateBatch(mkBatch(i).toDF("doc_id", "text"),
@@ -587,7 +587,7 @@ class StreamingSpec extends SparkSpec {
       "meteorological observations of lenticular clouds stacked above the caldera rim during the solstice kite festival of the highland villages",
       "catalogue of misprinted railway timetables collected by the stationmaster of the narrow gauge line through the juniper forest plateau")
     def build(): (String, String) = {
-      val root = java.nio.file.Files.createTempDirectory("graft-foldcrash").toString
+      val root = scratch("graft-foldcrash")
       val docsDir = s"$root/docs"; val fpDir = s"$root/fp"
       texts.zipWithIndex.foreach { case (t, i) =>
         streaming.Ingest.gateBatch(Seq((10L + i) -> t).toDF("doc_id", "text"),
@@ -641,7 +641,7 @@ class StreamingSpec extends SparkSpec {
 
       // committedFrontier parses the checkpoint commit log (and is 0
       // with no checkpoint at all)
-      val ck = java.nio.file.Files.createTempDirectory("graft-ck").toString
+      val ck = scratch("graft-ck")
       assert(streaming.Ingest.committedFrontier(spark, ck) == 0L)
       new java.io.File(s"$ck/commits").mkdirs()
       Seq("0", "1", "2").foreach { n =>
@@ -692,7 +692,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    val root = java.nio.file.Files.createTempDirectory("graft-ndplan").toString
+    val root = scratch("graft-ndplan")
     val docsDir = s"$root/docs"; val fpDir = s"$root/fp"
     // corpus batch: long docs -> many winnow fingerprints spread over
     // many fpb buckets
@@ -835,7 +835,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import org.apache.spark.sql.types._
-    val root = java.nio.file.Files.createTempDirectory("graft-evalgate").toString
+    val root = scratch("graft-evalgate")
     val docsDir = s"$root/docs"; val fpDir = s"$root/fp"
     val evalDir = s"$root/evalfp"
     val evalText = "the committee convened beneath seventeen flickering " +
@@ -913,8 +913,7 @@ class StreamingSpec extends SparkSpec {
     // the STREAM-level wiring: resumeNearDupGated passes evalFpDir
     // through to every trigger (a dropped pass-through would silently
     // disable compliance on the advertised entry point)
-    val sroot = java.nio.file.Files
-      .createTempDirectory("graft-evalgate-stream").toString
+    val sroot = scratch("graft-evalgate-stream")
     val inDir = s"$sroot/in"; new java.io.File(inDir).mkdirs()
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$inDir/b0.json"),
@@ -948,7 +947,7 @@ class StreamingSpec extends SparkSpec {
     // control: the near-dup gate ALONE accepts a per-doc-unique
     // phrase repeat (nothing to near-dup against) — proving the
     // repetition gate is the deciding layer, not a redundancy
-    val ctrl = java.nio.file.Files.createTempDirectory("graft-repgate-ctrl").toString
+    val ctrl = scratch("graft-repgate-ctrl")
     streaming.Ingest.gateBatch(
       Seq(10L -> degenerate(10L), clean0).toDF("doc_id", "text"),
       0L, s"$ctrl/docs", s"$ctrl/fp")
@@ -957,7 +956,7 @@ class StreamingSpec extends SparkSpec {
       "control: ungated ingest should accept the degenerate")
 
     // gated: rejected in batch 0, fingerprints and census stay clean
-    val root = java.nio.file.Files.createTempDirectory("graft-repgate").toString
+    val root = scratch("graft-repgate")
     val docsDir = s"$root/docs"; val fpDir = s"$root/fp"
     val n0 = streaming.Ingest.gateBatch(
       Seq(10L -> degenerate(10L), clean0).toDF("doc_id", "text"),
@@ -978,8 +977,7 @@ class StreamingSpec extends SparkSpec {
       .collect().toSet == Set(11L, 12L))
 
     // stream-level wiring: resumeNearDupGated passes the flag through
-    val sroot = java.nio.file.Files
-      .createTempDirectory("graft-repgate-stream").toString
+    val sroot = scratch("graft-repgate-stream")
     val inDir = s"$sroot/in"; new java.io.File(inDir).mkdirs()
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$inDir/b0.json"),

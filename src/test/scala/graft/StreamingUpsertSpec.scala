@@ -9,7 +9,7 @@ class StreamingUpsertSpec extends SparkSpec {
   import spark.implicits._
 
   private def root(): String =
-    java.nio.file.Files.createTempDirectory("graft-upsert").toString
+    scratch("graft-upsert")
 
   private def upd(rows: (Long, String, Long, String)*) =
     rows.toDF("doc_id", "text", "version", "op")

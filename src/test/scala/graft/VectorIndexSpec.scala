@@ -9,12 +9,7 @@ import org.apache.spark.sql.functions._
 class VectorIndexSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(tag: String): String = {
-    val d = java.nio.file.Files
-      .createTempDirectory(s"graft-vidx-$tag").toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
-  }
+  private def tmp(tag: String): String = scratch(s"graft-vidx-$tag")
 
   private def corpus = Tables.embeddings(spark, sf("sf0.001"))
 

@@ -54,7 +54,7 @@ class VelocitySpec extends SparkSpec {
       .select(col("event_type"), col("ts"))
     val (b0, b1) = (events.filter(dayofmonth(col("ts")) <= 15),
       events.filter(dayofmonth(col("ts")) > 15))
-    val root = java.nio.file.Files.createTempDirectory("graft-dow").toString
+    val root = scratch("graft-dow")
     val stateDir = s"$root/state"
     IncrementalStats.foldBatch(stateDir, Velocity.dayCounts(b0), 0L)
     val merged = IncrementalStats.foldBatch(stateDir,

@@ -25,7 +25,7 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("z-ordered files bound BOTH dimensions; x-sorted files do not") {
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
+    val dir = scratch("zorder")
     val pts = ZOrder.points(spark, sf("sf0.001"))
     ZOrder.writeZOrdered(pts, col("x"), col("y"), s"$dir/z", files = 8)
     pts.repartitionByRange(8, col("x")).sortWithinPartitions(col("x"))
@@ -67,7 +67,7 @@ class ZOrderSpec extends SparkSpec {
     // prunes x only (every surviving file spans all of y); the
     // z-ordered layout bounds both dimensions per file, so the same
     // predicate materializes strictly less.
-    val dir = java.nio.file.Files.createTempDirectory("zprune").toString
+    val dir = scratch("zprune")
     val n = 100000L
     val pts = spark.range(n).select(
       pmod(hash(col("id")), lit(16384)).cast("bigint").as("x"),
