@@ -161,7 +161,7 @@ object SparkEntry {
     //
     // st02_gate_trigger: the documents table ingested as 2
     // micro-batches through gateBatch — within-batch pair drop, then
-    // the cross-batch pruned-broadcast gate against the sealed first
+    // the cross-batch broadcast gate against the sealed first
     // half. The returned frame is the accepted corpus, so the count
     // the bench takes reads the real output.
     "st02_gate_trigger" -> ((s, dir) => {
@@ -283,7 +283,7 @@ object SparkEntry {
             org.apache.spark.sql.functions.col("embedding").as("qe")))
     }),
     // st03_maintain: the maintenance pass alone (recoverSwaps +
-    // compactCensus + foldBatches×2 + sealed-dir compacts) over gate
+    // compactCensus + foldBatches×2 + docs-dir compacts) over gate
     // state built UNTIMED by the benchSetup hook of the same name —
     // the stream-stopped pass an operator runs between triggers.
     "st03_maintain" -> ((s, dir) => {

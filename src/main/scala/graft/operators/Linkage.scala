@@ -498,9 +498,9 @@ object Linkage {
       // trigger pays one write latency instead of two.
       val slimB = slimFrame(recs, maxEdits)
         .transform(graft.CacheRegistry.register)
-      val varWrite = scala.concurrent.Future {
+      val varWrite = graft.SinkPool.submit(recs.sparkSession) {
         slimB.write.mode("overwrite").parquet(s"$path/varstate/batch=$id")
-      }(scala.concurrent.ExecutionContext.global)
+      }
       // cross-batch: probe the sealed state levels below this id.
       // Reads are SCHEMA'D (the gate's layout contract): schema
       // inference over a state tree whose only levels so far are

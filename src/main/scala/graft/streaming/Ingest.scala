@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -79,53 +79,45 @@ object Ingest {
   //      corpus view (only batches < its own id), so crash-replay is
   //      idempotent: no duplicates, no self-matching.
   //
-  // State layout — designed so PER-TRIGGER WORK IS INDEPENDENT OF
-  // CORPUS SIZE (O(batch + matched state)), the property an
-  // unbounded-ingest gate lives or dies by:
+  // State layout. Invariants the gate relies on:
   //
-  //   fpDir/batch=<id>/fpb=<b>/          accepted (doc_id, fp) rows,
-  //     sub-partitioned by the fingerprint bucket fpb =
-  //     pmod(hash(fp), FpBuckets). The cross-batch gate collects the
-  //     micro-batch's <= FpBuckets distinct bucket ids (a bounded
-  //     driver-side set, NOT data) and partition-PRUNES the state
-  //     scan to matched buckets, then joins with the batch side
-  //     BROADCAST — no exchange, no sort, no unmatched-bucket bytes
-  //     on the state side, ever. This beats a metastore-bucketed
-  //     table (sources.Ingest.writeBucketed) for stream state: the
-  //     in-memory catalog loses bucket specs across JVM restarts
-  //     (silently reintroducing the exchange on resume), while fpb
-  //     directories are self-describing to any fresh reader.
+  //   fpDir/batch=<id>/                  the accepted (doc_id, fp) rows
+  //     of one sealed micro-batch (or of one generation, see below) as
+  //     plain parquet files with no subdirectories: one file per
+  //     micro-batch, more only when a batch exceeds StateFileRows.
+  //     A sealed dir holding subdirectories (such as the fpb=<b>
+  //     buckets of an older layout) fails the gate fast. Partition
+  //     discovery therefore walks only the batch dirs, so a trigger
+  //     starts no parallel listing job, and the cross-batch probe
+  //     reads one file per live sealed dir, streamed into a hash join
+  //     against the broadcast batch side with no state-side exchange.
+  //     File and directory counts are bounded (generation folding);
+  //     rows read per trigger grow with the state.
   //
   //   fpDir/_census/delta/batch=<id>/    per-batch (fp, df) counts of
-  //     that batch's accepted fingerprints — the document-frequency
-  //     census maintained INCREMENTALLY instead of re-aggregating the
-  //     whole (doc_id, fp) corpus every trigger. Underscore-prefixed,
-  //     so corpus reads of fpDir never see it.
+  //     that batch's accepted fingerprints: the document-frequency
+  //     census, kept incrementally instead of re-aggregating the whole
+  //     (doc_id, fp) corpus every trigger. Underscore-prefixed, so
+  //     corpus reads of fpDir never see it.
   //
-  //   fpDir/_census/merged/fpb=<b>/      compact-and-swap merge of
-  //     all deltas <= the id recorded in merged/_max (written inside
-  //     the directory BEFORE the atomic swap, so the merge and its
-  //     frontier are never observable out of sync). One pre-aggregated
-  //     row per fp; each fpb's file is sorted by df DESCENDING so the
-  //     already-hot probe (df > k) skips cold row groups via parquet
-  //     min/max stats. Hot-fingerprint detection per trigger is then
-  //     O(hot + recent deltas): already-hot merged rows + merged rows
-  //     in the deltas' buckets (partition-pruned point lookups) +
-  //     delta-only fps — never a corpus-sized aggregation.
+  //   fpDir/_census/merged/              compact-and-swap merge of all
+  //     deltas <= the id recorded in merged/_max (written inside the
+  //     directory before the atomic swap, so the merge and its
+  //     frontier are never observable out of sync). One row per fp;
+  //     every file is sorted by df descending, so the already-hot
+  //     probe (df > k) skips cold row groups via parquet min/max
+  //     stats.
   // ---------------------------------------------------------------
 
-  /** Fingerprint-bucket fanout of the gate state. 64 keeps every
-    * bucket a handful of files at test scale; at 100 TB this is the
-    * knob you raise (bucket count scales with state size, pruning
-    * ratio scales with batch-to-bucket coverage). */
-  val FpBuckets = 64
+  /** Rows per sealed fingerprint file: 8M (doc_id, fp) pairs, about
+    * 128 MB before compression. A micro-batch writes one file; only a
+    * backfill-sized batch spills into more. */
+  private val StateFileRows = (128L << 20) / 16
 
   /** Census deltas are folded into `merged` every this many batches
     * (from inside [[gateBatch]], which may only compact batches below
     * its own id — those are the ones foreachBatch has committed). */
   val CensusCompactInterval = 16
-
-  private def fpBucket(c: Column): Column = pmod(hash(c), lit(FpBuckets))
 
   private def censusDir(fpDir: String) = s"$fpDir/_census"
 
@@ -216,8 +208,7 @@ object Ingest {
   // id-keyed cache would go silently stale across an external fold
   private val sealedDirMeta = new java.util.concurrent.ConcurrentHashMap[
     (String, Long, Long), SealedDir]
-  // (root, id, dir mtime) -> layout validated (fpb-bucketed, no
-  // interrupted compaction swap inside)
+  // (root, id, dir mtime) -> layout validated (flat: files only)
   private val layoutValidated = java.util.concurrent.ConcurrentHashMap
     .newKeySet[(String, Long, Long)]
 
@@ -324,11 +315,10 @@ object Ingest {
 
   /** Fold sealed batch dirs below `belowBatch` into generations until
     * no level holds `foldGroup` dirs — see the design block above.
-    * `fpbPartitioned` = the fpDir layout (fpb=<b> children, preserved
-    * through the fold); false for the flat docs sink. Returns the
+    * Both gate roots (docs and fingerprints) are flat, and each
+    * generation is written at `targetBytes` file size. Returns the
     * (lo, id, level) of each generation written. */
   def foldBatches(spark: SparkSession, root: String, belowBatch: Long,
-      fpbPartitioned: Boolean,
       foldGroup: Int = FoldGroup,
       targetBytes: Long = 128L << 20): Seq[(Long, Long, Int)] = {
     require(foldGroup >= 2, s"foldGroup must be >= 2, got $foldGroup")
@@ -372,24 +362,16 @@ object Ingest {
             // writer)
             val rows = nonEmpty.map(p => spark.read.parquet(p))
               .reduce(_ unionByName _)
-            if (fpbPartitioned)
-              // one writer task per bucket -> one file per fpb dir;
-              // the later per-generation compact pass is then a no-op
-              rows.repartition(col("fpb"))
-                .write.mode(SaveMode.Overwrite).partitionBy("fpb")
-                .parquet(tmp.toString)
-            else {
-              // flat generations are written AT target file size here
-              // (maintain never re-compacts them — a whole-dir rewrite
-              // would drop the `_gen` marker)
-              val totalBytes = nonEmpty.map { p =>
-                fs.getContentSummary(new Path(p)).getLength
-              }.sum
-              val nFiles =
-                math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-              rows.coalesce(nFiles)
-                .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-            }
+            // generations are written AT target file size here
+            // (maintain never re-compacts them — a whole-dir rewrite
+            // would drop the `_gen` marker)
+            val totalBytes = nonEmpty.map { p =>
+              fs.getContentSummary(new Path(p)).getLength
+            }.sum
+            val nFiles =
+              math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
+            rows.coalesce(nFiles)
+              .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
           }
           // marker LAST: tmp-with-_gen means fully written
           scala.util.Using.resource(
@@ -420,8 +402,7 @@ object Ingest {
     StructField("batch", LongType)))
 
   private def censusMergedSchema: StructType = StructType(Seq(
-    StructField("fp", LongType), StructField("df", LongType),
-    StructField("fpb", IntegerType)))
+    StructField("fp", LongType), StructField("df", LongType)))
 
   /** Crash recovery for the census compact-and-swap. The swap is two
     * renames (merged→trash, tmp→merged); a crash between them leaves
@@ -466,22 +447,19 @@ object Ingest {
   }
 
   /** The accepted-corpus fingerprint view a gate for batch
-    * `belowBatch` must see: all state rows of earlier batches,
-    * optionally partition-pruned to the given fingerprint buckets
-    * (the scan's PartitionFilters, not a post-read filter). */
+    * `belowBatch` must see: all state rows of earlier batches (the
+    * frontier is the scan's PartitionFilter, not a post-read filter). */
   def corpusView(spark: SparkSession, fpDir: String, belowBatch: Long,
-      docIdType: DataType, buckets: Option[Seq[Int]] = None,
-      excludeIds: Set[Long] = Set.empty): DataFrame = {
+      docIdType: DataType, excludeIds: Set[Long] = Set.empty): DataFrame = {
     val schema = StructType(Seq(
       StructField("doc_id", docIdType), StructField("fp", LongType),
-      StructField("batch", LongType), StructField("fpb", IntegerType)))
-    val base0 = spark.read.schema(schema).parquet(fpDir)
+      StructField("batch", LongType)))
+    val base = spark.read.schema(schema).parquet(fpDir)
       .filter(col("batch") < belowBatch)
     // stale fold sources: their rows are duplicated inside a covering
     // generation, so reading both would double-count shared fps
-    val base = if (excludeIds.isEmpty) base0
-      else base0.filter(!col("batch").isin(excludeIds.toSeq: _*))
-    buckets.fold(base)(bs => base.filter(col("fpb").isin(bs: _*)))
+    (if (excludeIds.isEmpty) base
+      else base.filter(!col("batch").isin(excludeIds.toSeq: _*)))
       .select(col("doc_id").as("corpus_id"), col("fp"))
   }
 
@@ -490,9 +468,9 @@ object Ingest {
     * the per-doc state. Merged rows answer with one pushed-down scan
     * (df > k, row-group-skippable); delta rows are re-aggregated only
     * over the uncompacted recent batches; fps that may have CROSSED
-    * the threshold since the last compaction are resolved by
-    * partition-pruned point lookups of the merged census in the
-    * deltas' buckets. None = no census yet (no earlier batch). */
+    * the threshold since the last compaction are resolved by joining
+    * the merged census against the broadcast delta aggregate. None =
+    * no census yet (no earlier batch). */
   def hotFps(spark: SparkSession, fpDir: String, belowBatch: Long,
       k: Int): Option[DataFrame] = {
     recoverCensus(spark, fpDir)
@@ -526,20 +504,14 @@ object Ingest {
         // delta-only branch
         val dAgg = d.groupBy(col("fp")).agg(sum(col("df")).as("ddf"))
           .transform(graft.CacheRegistry.register)
-        val dBuckets = dAgg.select(fpBucket(col("fp")).as("fpb"))
-          .distinct().collect().map(_.getInt(0)).toSeq
         val alreadyHot = m.filter(col("df") > k).select(col("fp"))
-        if (dBuckets.isEmpty) Some(alreadyHot)
-        else {
-          val crossed = m.filter(col("fpb").isin(dBuckets: _*))
-            .join(broadcast(dAgg), Seq("fp"))
-            .filter(col("df") + col("ddf") > k).select(col("fp"))
-          // delta-only fps (not in merged): ddf alone decides; a fp
-          // ALSO present in merged lands in `crossed` too — the final
-          // distinct() collapses it
-          val newlyHot = dAgg.filter(col("ddf") > k).select(col("fp"))
-          Some(alreadyHot.union(crossed).union(newlyHot).distinct())
-        }
+        val crossed = m.join(broadcast(dAgg), Seq("fp"))
+          .filter(col("df") + col("ddf") > k).select(col("fp"))
+        // delta-only fps (not in merged): ddf alone decides; a fp
+        // ALSO present in merged lands in `crossed` too — the final
+        // distinct() collapses it
+        val newlyHot = dAgg.filter(col("ddf") > k).select(col("fp"))
+        Some(alreadyHot.union(crossed).union(newlyHot).distinct())
     }
   }
 
@@ -580,9 +552,9 @@ object Ingest {
     * `keptFps` (the batch survivors' (doc_id, fp) fingerprints)
     * sharing >= `minShared` non-hot fingerprints with any accepted
     * corpus doc. Exposed separately from [[gateBatch]] so its plan
-    * shape — broadcast batch side, partition-pruned exchange-free
-    * state side — is assertable in specs. None = no drops possible
-    * (no earlier state, or nothing to probe after the hot filter). */
+    * shape — broadcast batch side, exchange-free state side — is
+    * assertable in specs. None = no drops possible (no earlier
+    * state). */
   def crossGateDrops(keptFps: DataFrame, fpDir: String, batchId: Long,
       docIdType: DataType, minShared: Int,
       maxDf: Option[Int]): Option[DataFrame] = {
@@ -593,40 +565,30 @@ object Ingest {
     val stale = staleFoldSources(dirs)
     val live = dirs.filterNot(d => stale(d.id)).filter(_.id < batchId)
     if (live.isEmpty) return None
-    // fail fast on a state layout without fpb bucketing (pre-bucketed
-    // or foreign writes): the schema'd read would fill fpb with null
-    // and the bucket filter would silently drop EVERY corpus row —
-    // the gate would accept all near-duplicates with no error. EVERY
+    // fail fast on a sealed dir that is not flat (the fpb=<b>
+    // bucketed layout of an older state, or a foreign nested write):
+    // partition discovery would read its subdirectories as another
+    // partition level, which this gate's schema does not have. EVERY
     // live earlier batch is checked, but the verdict is CACHED by
     // (dir, mtime): a sealed dir is immutable except for maintenance
-    // rewrites, which replace it via rename and so change its mtime —
-    // steady-state triggers re-validate only NEW batches instead of
-    // paying one listStatus per sealed batch per trigger (the r10
-    // linear-metadata growth path). Underscore AND dot prefixes are
-    // ignored — parquet readers skip both, and compaction leaves
-    // benign dot-prefixed tmp/trash dirs a crash away at any time.
+    // rewrites, which replace it via rename and so change its mtime,
+    // so a trigger lists only the dirs sealed since the last one.
+    // Underscore AND dot prefixes are ignored — parquet readers skip
+    // both (markers, checksums).
     locally {
       val (fs, _) = hadoopFs(spark, fpDir)
       live.foreach { d =>
         val key = (fpDir, d.id, d.mtime)
         if (!layoutValidated.contains(key)) {
-          val all = fs.listStatus(new Path(s"$fpDir/batch=${d.id}"))
-          // a dot-prefixed compaction TRASH dir means a crashed swap
-          // may hold a bucket's only copy — parquet readers would
-          // silently skip it, so gating must stop until maintain()
-          // recovers it. Stale _compact_tmp leftovers are benign
-          // (source intact).
-          require(!all.exists(_.getPath.getName.endsWith("._compact_old")),
-            s"state batch=${d.id} under $fpDir holds an interrupted compaction " +
-              "swap (._compact_old) — run maintain() to recover before gating")
-          val children = all.filterNot { st =>
-            val n = st.getPath.getName
-            n.startsWith("_") || n.startsWith(".")
-          }
-          require(children.isEmpty || children.forall(st =>
-              st.isDirectory && st.getPath.getName.startsWith("fpb=")),
-            s"fingerprint state batch=${d.id} under $fpDir is not fpb-bucketed " +
-              "(flat per-batch files) — rebuild the state with this layout")
+          val nested = fs.listStatus(new Path(s"$fpDir/batch=${d.id}"))
+            .filter { st =>
+              val n = st.getPath.getName
+              st.isDirectory && !n.startsWith("_") && !n.startsWith(".")
+            }
+          require(nested.isEmpty,
+            s"fingerprint state batch=${d.id} under $fpDir holds subdirectories " +
+              s"(${nested.map(_.getPath.getName).take(3).mkString(", ")}, ...), " +
+              "not flat (doc_id, fp) files — rebuild the state with this layout")
           layoutValidated.add(key)
         }
       }
@@ -645,31 +607,23 @@ object Ingest {
       s"df cap $maxDf configured but no census exists under $fpDir " +
         "despite sealed state batches — census lost or foreign state")
     val gateFps = hot.fold(keptFps)(h =>
-        keptFps.join(broadcast(h), Seq("fp"), "left_anti"))
-      .transform(graft.CacheRegistry.register)
-    // bounded by construction: at most FpBuckets distinct values
-    val buckets = gateFps.select(fpBucket(col("fp")).as("fpb"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    if (buckets.isEmpty) None
-    else {
-      val corpus = corpusView(spark, fpDir, batchId, docIdType, Some(buckets),
-        excludeIds = stale)
-      // batch side is micro-batch-sized -> broadcast; the state scan
-      // streams matched buckets straight into the hash probe
-      Some(corpus.join(broadcast(gateFps), Seq("fp"))
-        .groupBy(col("corpus_id"), col("doc_id"))
-        .agg(count(lit(1)).as("shared"))
-        .filter(col("shared") >= minShared)
-        .select(col("doc_id")).distinct()
-        .transform(graft.CacheRegistry.register))
-    }
+      keptFps.join(broadcast(h), Seq("fp"), "left_anti"))
+    // batch side is micro-batch-sized -> broadcast; the state scan
+    // streams straight into the hash probe
+    Some(corpusView(spark, fpDir, batchId, docIdType, excludeIds = stale)
+      .join(broadcast(gateFps), Seq("fp"))
+      .groupBy(col("corpus_id"), col("doc_id"))
+      .agg(count(lit(1)).as("shared"))
+      .filter(col("shared") >= minShared)
+      .select(col("doc_id")).distinct()
+      .transform(graft.CacheRegistry.register))
   }
 
   /** One micro-batch of the near-dup gate (the foreachBatch body —
     * public so a replay is testable as a plain call). Reads corpus
     * fingerprint state from `fpDir` (batches BELOW `batchId` only),
     * writes survivors to `docsDir/batch=<id>`, their fingerprints to
-    * `fpDir/batch=<id>` (fpb-bucketed) and the batch's df census
+    * `fpDir/batch=<id>` (one flat file) and the batch's df census
     * delta to `fpDir/_census/delta/batch=<id>`. Returns the survivor
     * count.
     *
@@ -764,54 +718,47 @@ object Ingest {
         .map(_.distinct().transform(graft.CacheRegistry.register))
       val survivors = extDrops.fold(kept)(d =>
           kept.join(d, Seq("doc_id"), "left_anti"))
+      // register only a NEW frame: with no external drops the
+      // survivors' fingerprints are keptFps, already cached
       val survFps = extDrops.fold(keptFps)(d =>
-          keptFps.join(d, Seq("doc_id"), "left_anti"))
-        .transform(graft.CacheRegistry.register)
-      // 3. idempotent per-batch writes: overwrite, never append.
-      // r21 (guide §2.6 — overlap independent jobs): the state and
-      // census writes run CONCURRENTLY with the survivors write — the
-      // three sinks are independent (all consume the shared caches,
-      // whose concurrent fill is the BlockManager's compute-or-wait;
-      // every reader of the state/census trees filters batch < id, so
-      // a trigger's own in-flight levels are invisible), and the
-      // trigger's commit point is this call's RETURN (foreachBatch
-      // logs the batch after the body finishes), so relative write
-      // order never mattered for crash-replay: a crash anywhere
-      // replays the whole batch and every level is overwrite-
-      // idempotent. Both futures are settled on every exit path (the
-      // linkageBatch zombie-write rationale).
-      val ec = scala.concurrent.ExecutionContext.global
-      // repartition on the bucket BEFORE the dynamic-partition write:
-      // without it every task writes a file into every fpb dir it
-      // touches (tasks × buckets small files — measured 11.7 s of a
-      // 25 s micro-batch at sf0.1, and a file-count explosion the
-      // later batches' corpus scans pay for); with it each bucket
-      // gets one or two files and the write is ~10x cheaper
-      val stateWrite = scala.concurrent.Future {
-        survFps.withColumn("fpb", fpBucket(col("fp")))
-          .repartition(col("fpb"))
-          .write.mode(SaveMode.Overwrite).partitionBy("fpb")
+        keptFps.join(d, Seq("doc_id"), "left_anti")
+          .transform(graft.CacheRegistry.register))
+      // 3. idempotent per-batch writes: overwrite, never append. The
+      // state and census writes run CONCURRENTLY with the survivors
+      // write: the three sinks are independent (all consume the
+      // shared caches, whose concurrent fill is the BlockManager's
+      // compute-or-wait; every reader of the state/census trees
+      // filters batch < id, so a trigger's own in-flight levels are
+      // invisible), and the trigger's commit point is this call's
+      // RETURN (foreachBatch logs the batch after the body finishes),
+      // so relative write order does not matter for crash-replay: a
+      // crash anywhere replays the whole batch and every level is
+      // overwrite-idempotent. Both futures run under this trigger's
+      // job group (SinkPool), so stopping the query cancels them, and
+      // both are settled on every exit path, so no write outlives its
+      // trigger into a replay.
+      val spark = batch.sparkSession
+      // one file per sealed dir (see the state layout block)
+      val stateWrite = graft.SinkPool.submit(spark) {
+        survFps.coalesce(1).write.mode(SaveMode.Overwrite)
+          .option("maxRecordsPerFile", StateFileRows)
           .parquet(s"$fpDir/batch=$batchId")
-      }(ec)
+      }
       // census delta: this batch's contribution to the per-fp df —
       // winnowFps is distinct per doc, so count == docs carrying fp
-      val censusWrite = scala.concurrent.Future {
+      val censusWrite = graft.SinkPool.submit(spark) {
         survFps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
           .write.mode(SaveMode.Overwrite)
           .parquet(s"${censusDir(fpDir)}/delta/batch=$batchId")
-      }(ec)
-      // The r20 shape cached the text-bearing survivor frame solely
-      // so a second count() pass could read it — the columnar cache
-      // build was the cost. The count now comes from the WRITTEN
-      // level's parquet footers (schema'd, zero-column projection —
-      // a metadata-sized job), so the cache pin and the full extra
-      // pass are gone. NOT Dataset.observe: registering an
+      }
+      // The survivor count comes from the WRITTEN level's parquet
+      // footers (schema'd, zero-column projection — a metadata-sized
+      // job), so the text-bearing survivor frame is neither cached
+      // nor read twice. NOT Dataset.observe: registering an
       // Observation initializes the session's ObservationManager,
       // which is non-serializable and from then on breaks every
       // closure that captures a SparkSession-bearing object (e.g. an
-      // ML model carrying its training summary) — measured as three
-      // FraudModelSpec failures when the gate ran first in a shared
-      // session.
+      // ML model carrying its training summary).
       try survivors.write.mode(SaveMode.Overwrite)
         .parquet(s"$docsDir/batch=$batchId")
       finally {
@@ -828,8 +775,8 @@ object Ingest {
       // periodic census maintenance over COMMITTED batches only
       // (everything below this batch's id); idempotent under replay
       if (batchId > 0 && batchId % CensusCompactInterval == 0)
-        compactCensus(batch.sparkSession, fpDir, belowBatch = batchId)
-      batch.sparkSession.read.schema(batch.schema)
+        compactCensus(spark, fpDir, belowBatch = batchId)
+      spark.read.schema(batch.schema)
         .parquet(s"$docsDir/batch=$batchId").count()
     }
   }
@@ -838,9 +785,9 @@ object Ingest {
     * compacted `merged` census (compact-and-swap: written to a temp
     * directory WITH its new `_max` frontier, atomically renamed in,
     * merged deltas deleted last — a crash at any point leaves a state
-    * a later run reads consistently or re-compacts). Each fpb
-    * partition is one file sorted by df descending, so the gate's
-    * already-hot probe reads only hot row groups. Returns the new
+    * a later run reads consistently or re-compacts). Every file is
+    * sorted by df descending, so the gate's already-hot probe reads
+    * only hot row groups. Returns the new
     * frontier, or None when there was nothing to fold. */
   def compactCensus(spark: SparkSession, fpDir: String,
       belowBatch: Long = Long.MaxValue): Option[Long] = {
@@ -869,14 +816,8 @@ object Ingest {
     // recoverCensus above guarantees no tmp/trash leftovers exist here
     val tmp = new Path(s"$cDir/.merged._compact_tmp")
     all.groupBy(col("fp")).agg(sum(col("df")).as("df"))
-      .withColumn("fpb", fpBucket(col("fp")))
-      // one writer task per bucket group; the fpb-prefixed sort both
-      // satisfies the dynamic-partition writer (no re-sort that would
-      // scramble the df order) and lands df-descending row groups
-      .repartition(col("fpb"))
-      .sortWithinPartitions(col("fpb"), col("df").desc)
-      .write.mode(SaveMode.Overwrite).partitionBy("fpb")
-      .parquet(tmp.toString)
+      .sortWithinPartitions(col("df").desc)
+      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     scala.util.Using.resource(
         fs.create(new Path(tmp, "_max"), true)) { out =>
       out.write(newMax.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -926,8 +867,7 @@ object Ingest {
     recoverFolds(spark, fpDir)
     val (fs, _) = hadoopFs(spark, fpDir)
     fs.delete(new Path(censusDir(fpDir)), true)
-    val schema = StructType(Seq(
-      StructField("fp", LongType), StructField("fpb", IntegerType)))
+    val schema = StructType(Seq(StructField("fp", LongType)))
     sealedDirs(spark, fpDir).map(_.id).foreach { id =>
       spark.read.schema(schema).parquet(s"$fpDir/batch=$id")
         .groupBy(col("fp")).agg(count(lit(1)).as("df"))
@@ -948,34 +888,28 @@ object Ingest {
     * that way.
     *
     * Work done: fold census deltas ([[compactCensus]]), fold sealed
-    * batch DIRECTORIES into generations ([[foldBatches]] — keeps the
-    * gate's per-trigger driver metadata O(log batches) instead of
-    * O(batches), closing r10's documented growth path), then
-    * small-file-compact sealed dirs via
-    * [[graft.sources.Ingest.compact]] (per-trigger file sinks
-    * accumulate KB-files; at scale per-file open overhead would
-    * dominate the pruned gate scan). Flat docs GENERATIONS are
-    * skipped there: foldBatches already wrote them at target file
-    * size, and compact's whole-dir rewrite would drop the `_gen`
-    * coverage marker. */
+    * batch DIRECTORIES of both roots into generations
+    * ([[foldBatches]] — keeps the gate's per-trigger driver metadata
+    * O(log batches) instead of O(batches)), then small-file-compact
+    * the level-0 docs dirs via [[graft.sources.Ingest.compact]] (the
+    * survivors write lands one file per task). Fingerprint dirs need
+    * no compaction: each is sealed as one file. Docs GENERATIONS are
+    * skipped too: foldBatches already wrote them at target file size,
+    * and compact's whole-dir rewrite would drop the `_gen` coverage
+    * marker. */
   def maintain(spark: SparkSession, docsDir: String, fpDir: String,
       belowBatch: Long,
       targetBytes: Long = 128L << 20,
       foldGroup: Int = FoldGroup): Unit = {
-    // recover orphaned swaps at the ROOTS first: a batch dir renamed
-    // to .batch=N._compact_old by a crashed compact is invisible to
-    // the name-based enumerations below, so without this sweep the
-    // per-batch compact calls would never reach (or restore) it
+    // recover orphaned swaps at the docs ROOT first: a batch dir
+    // renamed to .batch=N._compact_old by a crashed compact is
+    // invisible to the name-based enumerations below, so without this
+    // sweep the per-batch compact calls would never reach (or
+    // restore) it
     graft.sources.Ingest.recoverSwaps(spark, docsDir)
-    graft.sources.Ingest.recoverSwaps(spark, fpDir)
     compactCensus(spark, fpDir, belowBatch)
-    foldBatches(spark, fpDir, belowBatch, fpbPartitioned = true,
-      foldGroup, targetBytes)
-    foldBatches(spark, docsDir, belowBatch, fpbPartitioned = false,
-      foldGroup, targetBytes)
-    sealedDirs(spark, fpDir).map(_.id).filter(_ < belowBatch).foreach { id =>
-      graft.sources.Ingest.compact(spark, s"$fpDir/batch=$id", targetBytes)
-    }
+    foldBatches(spark, fpDir, belowBatch, foldGroup, targetBytes)
+    foldBatches(spark, docsDir, belowBatch, foldGroup, targetBytes)
     sealedDirs(spark, docsDir)
       .filter(d => d.level == 0 && d.id < belowBatch)
       .foreach { d =>

@@ -48,18 +48,16 @@ class FoldLatticeSpec extends SparkSpec {
     "fold" -> 0, "crashTmp" -> 0, "crashTrash" -> 0, "staleSrc" -> 0)
 
   test("fold lattice invariants hold under random op/crash interleavings") {
-    // both fold layouts: flat (docs root) and fpb-partitioned (fp
-    // state root — the branch that repartitions on the bucket and
-    // preserves fpb= children through the fold)
-    (1 to 4).foreach(runScenario(_, fpbPartitioned = false))
-    (5 to 8).foreach(runScenario(_, fpbPartitioned = true))
+    // both gate roots' schemas: docs rows and (doc_id, fp) rows
+    (1 to 4).foreach(runScenario(_, fpSchema = false))
+    (5 to 8).foreach(runScenario(_, fpSchema = true))
     fired.foreach { case (k, n) =>
       assert(n > 0, s"injection '$k' never fired — property is vacuous " +
         s"for it (fired=$fired); retune seeds or frequencies")
     }
   }
 
-  private def runScenario(seed: Int, fpbPartitioned: Boolean): Unit = {
+  private def runScenario(seed: Int, fpSchema: Boolean): Unit = {
     val ops = opsGen.pureApply(Gen.Parameters.default, rng.Seed(seed.toLong))
     val root = scratch(s"graft-foldprop$seed")
     val conf = spark.sparkContext.hadoopConfiguration
@@ -99,13 +97,13 @@ class FoldLatticeSpec extends SparkSpec {
     ops.foreach {
       case Add(n) =>
         val rows = (0 until n).map(_ => { val d = nextDoc; nextDoc += 1; d })
-        val df = rows.toDF("doc_id").withColumn("src", lit(nextBatch))
-        if (fpbPartitioned)
-          // the fp-state layout: fpb= children inside each batch dir
-          df.withColumn("fpb", (col("doc_id") % 4).cast("int"))
-            .repartition(col("fpb"))
-            .write.partitionBy("fpb").parquet(s"$root/batch=$nextBatch")
-        else df.coalesce(1).write.parquet(s"$root/batch=$nextBatch")
+        val df =
+          if (fpSchema)
+            // the fp-state rows: a fingerprint derived from doc_id, so
+            // the check below can tell a row kept its own
+            rows.toDF("doc_id").withColumn("fp", col("doc_id") * 31L + 7L)
+          else rows.toDF("doc_id").withColumn("src", lit(nextBatch))
+        df.coalesce(1).write.parquet(s"$root/batch=$nextBatch")
         expected ++= rows
         nextBatch += 1
 
@@ -124,8 +122,7 @@ class FoldLatticeSpec extends SparkSpec {
           }
         }
         val wrote = streaming.Ingest.foldBatches(spark, root,
-          belowBatch = nextBatch, fpbPartitioned = fpbPartitioned,
-          foldGroup = g)
+          belowBatch = nextBatch, foldGroup = g)
         if (wrote.nonEmpty) fired("fold") += 1
 
       case CrashTmp =>
@@ -172,14 +169,14 @@ class FoldLatticeSpec extends SparkSpec {
     streaming.Ingest.recoverFolds(spark, root)
 
     // coverage exactness: every ingested doc, exactly once (and, for
-    // the fpb layout, still under its correct bucket child)
+    // the fp rows, still paired with its own fingerprint)
     if (expected.nonEmpty) {
       val got = spark.read.parquet(root)
         .select("doc_id").as[Long].collect().toSeq
-      if (fpbPartitioned)
+      if (fpSchema)
         assert(spark.read.parquet(root)
-          .filter(col("fpb") =!= (col("doc_id") % 4)).isEmpty,
-          ctx("fold scrambled fpb bucket assignment"))
+          .filter(col("fp") =!= col("doc_id") * 31L + 7L).isEmpty,
+          ctx("fold separated a doc_id from its fingerprint"))
       assert(got.size == expected.size,
         ctx(s"read ${got.size} rows, ingested ${expected.size}"))
       assert(got.toSet == expected, ctx("coverage mismatch"))

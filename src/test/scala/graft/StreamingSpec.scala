@@ -472,34 +472,18 @@ class StreamingSpec extends SparkSpec {
       val unc = streaming.Ingest.crossGateDrops(probe, fpDir2, 2L,
         LongType, 3, None).get.as[Long].collect().toSet
       assert(unc == Set(9L), "uncapped gate should drop the near-dup")
-      // 3. a flat (non-fpb-bucketed) state layout fails fast instead of
-      // null-filtering every corpus row into silent accept-everything
-      val flatRoot = scratch("graft-ndflat")
-      val flatFp = s"$flatRoot/fp"
+      // 3. a sealed dir in the fpb=<b> bucketed layout (subdirectories,
+      // not flat files) fails fast instead of being read with an extra
+      // partition level
+      val bucketRoot = scratch("graft-ndbucket")
+      val bucketFp = s"$bucketRoot/fp"
       operators.Dedup.winnowFps(Seq(1L -> base).toDF("doc_id", "text"))
-        .write.parquet(s"$flatFp/batch=0")
-      assertThrows[IllegalArgumentException] {
-        streaming.Ingest.crossGateDrops(probe, flatFp, 1L, LongType, 3, None)
+        .withColumn("fpb", pmod(hash(col("fp")), lit(64)))
+        .write.partitionBy("fpb").parquet(s"$bucketFp/batch=0")
+      val err = intercept[IllegalArgumentException] {
+        streaming.Ingest.crossGateDrops(probe, bucketFp, 1L, LongType, 3, None)
       }
-      // 4. an interrupted per-batch compaction (a bucket's only copy in
-      // its ._compact_old trash) stops the gate instead of silently
-      // gating without that bucket; maintain() recovers it and the
-      // gate's decisions are exactly the pre-crash ones
-      val (docsDir3, fpDir3) = freshState()
-      val preCrash = streaming.Ingest.crossGateDrops(probe, fpDir3, 2L,
-        LongType, 3, None).get.as[Long].collect().toSet
-      val b0 = new Path(s"$fpDir3/batch=0")
-      val bucket = fs.listStatus(b0).map(_.getPath)
-        .find(_.getName.startsWith("fpb=")).get
-      require(fs.rename(bucket,
-        new Path(b0, s".${bucket.getName}._compact_old")))
-      assertThrows[IllegalArgumentException] {
-        streaming.Ingest.crossGateDrops(probe, fpDir3, 2L, LongType, 3, None)
-      }
-      streaming.Ingest.maintain(spark, docsDir3, fpDir3, belowBatch = 2L)
-      assert(streaming.Ingest.crossGateDrops(probe, fpDir3, 2L,
-        LongType, 3, None).get.as[Long].collect().toSet == preCrash,
-        "recovery changed gate decisions")
+      assert(err.getMessage.contains("fpb="), err.getMessage)
     } finally CacheRegistry.unpersistAll()
   }
 
@@ -687,28 +671,39 @@ class StreamingSpec extends SparkSpec {
     } finally CacheRegistry.unpersistAll()
   }
 
-  test("near-dup gate per-trigger plan: state side pruned to matched fp buckets, exchange-free") {
+  test("near-dup gate per-trigger plan: one file read per sealed batch, exchange-free") {
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     val root = scratch("graft-ndplan")
     val docsDir = s"$root/docs"; val fpDir = s"$root/fp"
-    // corpus batch: long docs -> many winnow fingerprints spread over
-    // many fpb buckets
-    val corpus = (1L to 12L).map { i =>
-      i -> (s"document number $i opens with its own preamble " +
-        (1 to 40).map(j => s"tok${i * 97 + j * 13}").mkString(" "))
+    // two corpus batches of long docs -> hundreds of winnow
+    // fingerprints per sealed batch
+    (0L to 1L).foreach { b =>
+      val corpus = (1L to 12L).map(_ + 12L * b).map { i =>
+        i -> (s"document number $i opens with its own preamble " +
+          (1 to 40).map(j => s"tok${i * 97 + j * 13}").mkString(" "))
+      }
+      streaming.Ingest.gateBatch(corpus.toDF("doc_id", "text"), b, docsDir, fpDir)
     }
-    streaming.Ingest.gateBatch(corpus.toDF("doc_id", "text"), 0L, docsDir, fpDir)
-    // probe batch: ONE short doc -> a handful of fingerprints, so the
-    // gate join must touch only its buckets, not the whole state
     val probeFps = operators.Dedup.winnowFps(
       Seq(100L -> "alpha beta gamma delta epsilon").toDF("doc_id", "text"))
     val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
+    val listings = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p =>
+            Option(p.getProperty("spark.job.description")))
+            .exists(_.startsWith("Listing leaf files")))
+          listings.incrementAndGet()
+    }
     try {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val drops = streaming.Ingest.crossGateDrops(probeFps, fpDir, 1L,
+      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(l)
+      val drops = streaming.Ingest.crossGateDrops(probeFps, fpDir, 2L,
         LongType, operators.Dedup.WinnowMinShared,
         Some(operators.Dedup.DefaultMaxDf)).get
       // the gate pieces are CacheRegistry-cached, so physical nodes
@@ -736,12 +731,10 @@ class StreamingSpec extends SparkSpec {
       val scan = flatten(plan).collectFirst {
         case s: FileSourceScanExec if isCorpusScan(s) => s
       }.get
-      // pruning happens AT the scan (PartitionFilters), on both the
-      // corpus-view frontier and the probe's fingerprint buckets
+      // the corpus-view frontier is pruned AT the scan
+      // (PartitionFilters), not filtered after the read
       assert(scan.partitionFilters.exists(_.toString.contains("batch")),
         "corpus-view batch frontier not a partition filter")
-      assert(scan.partitionFilters.exists(_.toString.contains("fpb")),
-        "fp-bucket pruning not a partition filter")
       // the state side streams straight into a broadcast hash probe:
       // no exchange (and no sort) anywhere between scan and join
       val bhj = flatten(plan).collectFirst {
@@ -754,28 +747,141 @@ class StreamingSpec extends SparkSpec {
           .isDefined).get
       assert(streamedSide.collect { case e: ShuffleExchangeExec => e }.isEmpty,
         "state side of the gate join is shuffled")
-      // and the pruning is real bytes, not plan decoration: the scan
-      // read strictly fewer files than the state holds
+      // each sealed batch is one flat file, and the scan reads exactly
+      // one file per live sealed batch; partition discovery walks only
+      // the batch dirs, so no parallel listing job runs
       drops.collect()
-      val stateFiles = {
-        val fs = new org.apache.hadoop.fs.Path(fpDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val it = fs.listFiles(new org.apache.hadoop.fs.Path(fpDir), true)
-        var n = 0
-        while (it.hasNext) {
-          val f = it.next()
-          if (f.getPath.getName.endsWith(".parquet") &&
-            !f.getPath.toString.contains("_census")) n += 1
-        }
-        n
-      }
+      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
       val read = scan.metrics("numFiles").value
-      assert(read < stateFiles,
-        s"scan read $read of $stateFiles state files — no pruning happened")
+      assert(read == 2L, s"scan read $read files for 2 sealed batches")
+      assert(listings.get == 0,
+        s"${listings.get} listing jobs while reading the gate state")
     } finally {
+      spark.sparkContext.removeSparkListener(l)
       spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
       CacheRegistry.unpersistAll()
     }
+  }
+
+  test("near-dup gate: per-trigger work stays flat as sealed batches accumulate") {
+    import org.apache.hadoop.fs.Path
+    val root = scratch("graft-ndgrowth")
+    val docsDir = s"$root/docs"; val fpDir = s"$root/fp"
+    val sc = spark.sparkContext
+    val fs = new Path(fpDir).getFileSystem(sc.hadoopConfiguration)
+    // ten novel long docs per batch (hundreds of fingerprints) plus a
+    // near-dup of the previous batch's first doc, so every later
+    // trigger probes the state and drops one doc
+    def doc(i: Long) = s"record $i begins its own account " +
+      (1 to 60).map(j => s"w${i * 131 + j * 17}").mkString(" ")
+    def mkBatch(b: Long) = {
+      val fresh = (0L until 10L).map(k => (b * 100 + k) -> doc(b * 100 + k))
+      val dup =
+        if (b == 0) Nil else Seq((b * 100 + 99) -> s"${doc((b - 1) * 100)} with an edit")
+      (fresh ++ dup).toDF("doc_id", "text")
+    }
+    case class Work(jobs: Int, tasks: Int, listings: Int)
+    val jobs, tasks, listings = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        if (Option(e.properties).flatMap(p =>
+            Option(p.getProperty("spark.job.description")))
+            .exists(_.startsWith("Listing leaf files")))
+          listings.incrementAndGet()
+      }
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        tasks.incrementAndGet()
+    }
+    val work = scala.collection.mutable.ArrayBuffer.empty[Work]
+    sc.addSparkListener(l)
+    try {
+      (0L until 7L).foreach { b =>
+        org.apache.spark.GraftTestBus.drain(sc)
+        jobs.set(0); tasks.set(0); listings.set(0)
+        streaming.Ingest.gateBatch(mkBatch(b), b, docsDir, fpDir)
+        org.apache.spark.GraftTestBus.drain(sc)
+        work += Work(jobs.get, tasks.get, listings.get)
+        if ((b + 1) % 3 == 0)
+          streaming.Ingest.maintain(spark, docsDir, fpDir,
+            belowBatch = b + 1, foldGroup = 3)
+      }
+      assert(spark.read.parquet(docsDir).count() == 70L,
+        "every near-dup dropped, every novel doc accepted")
+      assert(work.forall(_.listings == 0),
+        s"listing jobs ran during a trigger: $work")
+      // every sealed fp dir, plain batch or generation, is one file
+      fs.listStatus(new Path(fpDir)).map(_.getPath)
+        .filter(_.getName.startsWith("batch=")).foreach { d =>
+          val files = fs.listStatus(d).map(_.getPath.getName)
+            .filterNot(n => n.startsWith("_") || n.startsWith("."))
+          assert(files.length == 1, s"$d holds ${files.mkString(", ")}")
+        }
+      // triggers 3 and 6 both follow a maintenance pass; the second
+      // gates against twice the sealed rows without more jobs or tasks
+      // (it may run fewer: which concurrent sink fills a shared cache
+      // or shuffle first decides which job runs the stage)
+      assert(work(6).jobs <= work(3).jobs + 2 &&
+        work(6).tasks <= work(3).tasks + 2,
+        s"trigger 3 did ${work(3)}, trigger 6 did ${work(6)} (all: $work)")
+    } finally {
+      sc.removeSparkListener(l)
+      CacheRegistry.unpersistAll()
+    }
+  }
+
+  test("near-dup gate: a restarted stream's sink writes run under its own job group") {
+    import org.apache.spark.sql.types._
+    val root = scratch("graft-ndgroup")
+    val inDir = s"$root/in"; val docsDir = s"$root/docs"
+    val fpDir = s"$root/fp"; val ckDir = s"$root/ck"
+    new java.io.File(inDir).mkdirs()
+    val schema = StructType(Seq(
+      StructField("doc_id", LongType), StructField("text", StringType)))
+    def land(name: String, rows: Seq[(Long, String)]): Unit =
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$inDir/$name"),
+        rows.map { case (id, t) => s"""{"doc_id":$id,"text":"$t"}""" }
+          .mkString("\n").getBytes("UTF-8"))
+    val base = "the quick brown fox jumps over the lazy dog while seventeen " +
+      "green parrots recite astonishing poetry about distant nebulae and forgotten harbors"
+    def start() = streaming.Ingest.resumeNearDupGated(spark, inDir, schema,
+      docsDir, fpDir, ckDir)
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(Option(e.properties)
+          .map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    try {
+      land("b1.json", Seq(1L -> base,
+        2L -> "unrelated inventory ledger rows describing turnip futures"))
+      val q1 = start()
+      try q1.processAllAvailable() finally q1.stop()
+      // the restart gates a near-dup of batch 0 and a novel doc
+      land("b2.json", Seq(3L -> s"$base once more",
+        4L -> "novel astronomy puzzle involving hexagonal basalt columns"))
+      org.apache.spark.GraftTestBus.drain(sc)
+      sc.addSparkListener(l)
+      val q2 = start()
+      try q2.processAllAvailable()
+      finally {
+        q2.stop()
+        org.apache.spark.GraftTestBus.drain(sc)
+        sc.removeSparkListener(l)
+      }
+      val runId = q2.runId.toString
+      val seen = groups.toArray.toSeq
+      assert(seen.nonEmpty, "the restarted stream ran no jobs")
+      assert(seen.forall(_ == runId),
+        s"jobs outside the stream's job group $runId: " +
+          seen.filterNot(_ == runId).distinct.mkString(", "))
+      assert(spark.read.parquet(docsDir).select("doc_id").as[Long]
+        .collect().toSeq.sorted == Seq(1L, 2L, 4L))
+    } finally CacheRegistry.unpersistAll()
   }
 
   test("streaming exact dedup: dropDuplicatesWithinWatermark on fingerprint") {
