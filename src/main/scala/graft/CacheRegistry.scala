@@ -1,9 +1,10 @@
 package graft
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.storage.StorageLevel
 
 /** Session-lifetime cache registry. Operators here cache small derived
-  * frames (value-counts state, routed corpora, candidate sets) whose
+  * frames (value-counts state, specced corpora, candidate sets) whose
   * pins are correct for a driver-per-run world but would accumulate in
   * a long-lived session running stats queries repeatedly. Every
   * library-internal `.cache()` goes through `register`, and a host
@@ -37,9 +38,10 @@ object CacheRegistry {
     * so the registry stays bounded under repeated query-face calls.
     * Inside [[scoped]], a NEWLY pinned entry is owned by the innermost
     * scope; an already-registered plan stays owned by whoever pinned
-    * it first. */
+    * it first. A plan that is already cached is not cached again, so
+    * re-registering logs no CacheManager warning. */
   def register[T](ds: Dataset[T]): Dataset[T] = {
-    ds.cache()
+    if (ds.storageLevel == StorageLevel.NONE) ds.cache()
     synchronized {
       val fresh = !refs.exists(r => (r.sparkSession eq ds.sparkSession) &&
         r.queryExecution.analyzed.sameResult(ds.queryExecution.analyzed))

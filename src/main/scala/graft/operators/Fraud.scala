@@ -41,8 +41,8 @@ object Fraud {
   }
 
   /** Median from a pre-aggregated value-counts frame (keys, value,
-    * `_c`) — lets a caller that also needs moments reuse ONE shuffle
-    * for both (see RiskEngine.aggregateStats). */
+    * `_c`). A caller that also needs moments derives both from one
+    * window pass instead (`IncrementalStats.statsFromCounts`). */
   def groupMedianFromCounts(counts: DataFrame, keys: Seq[String],
       value: String, out: String): DataFrame = {
     val k = keys.map(col)
@@ -87,9 +87,9 @@ object Fraud {
     // one value-counts shuffle feeds moments AND median (weighted
     // decimal sums are exactly the row-level sums); the counts frame
     // doubles as the incremental-maintenance state (IncrementalStats)
-    val counts = IncrementalStats
-      .valueCounts(p, Seq("category", "cond"), "price").transform(graft.CacheRegistry.register)
-    IncrementalStats.statsFromCounts(counts, Seq("category", "cond"), "price")
+    val keys = Seq("category", "cond")
+    IncrementalStats.statsFromCounts(
+      IncrementalStats.valueCounts(p, keys, "price"), keys, "price")
   }
 
   val f01Sql: String =

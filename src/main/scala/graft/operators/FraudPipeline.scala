@@ -34,13 +34,13 @@ import org.apache.spark.sql.functions._
   * Downstream composition should land on a materialized boundary
   * (write, cache register, or collected rows for driver-side marts).
   *
-  * Scale posture: the chain inherits each stage's own discipline —
-  * the corpus is read and spec-extracted ONCE into a cached frame
-  * consumed by both the stats and the scoring passes, so extraction
-  * runs once per listing; stats rows are model metadata
-  * (bounded by categories × conditions × components), so feeding them
-  * back via the driver is the broadcast-a-model shape, not a
-  * collect-the-data anti-pattern; the alert filter lands on the
+  * Scale posture: the corpus is read and spec-extracted once into
+  * the chain's only cache, the specced frame, which both the stats
+  * and the scoring passes read; extraction runs once per listing.
+  * The stats are one plan over that cache. Stats rows are model
+  * metadata (bounded by categories × conditions × components), so
+  * feeding them back via the driver is the broadcast-a-model shape,
+  * not a collect-the-data anti-pattern. The alert filter lands on the
   * scored frame before any ordering.
   */
 object FraudPipeline {

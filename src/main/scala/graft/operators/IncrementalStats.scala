@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Incremental maintenance of the market statistics — the Spark-scale
@@ -55,19 +56,44 @@ object IncrementalStats {
     * min-support 2) re-derived from a counts state — the same
     * order-independent decimal-sum moments and order-statistic median
     * as the batch path (`Fraud.f01`), computed over the (much smaller)
-    * state instead of the fact table. */
+    * state instead of the fact table.
+    *
+    * One keyed window pass: per key, the running count `_cum` (values
+    * ascending), the group count `n` and the decimal Σx and Σx² come
+    * from windows over ONE key partitioning; a filter keeps the rows
+    * holding the order statistics m1 = (n+1)/2 and m2 = (n+2)/2, and
+    * the final `groupBy(keys)` reuses the window's partitioning. The
+    * plan has two exchanges (the caller's value counts, then the key
+    * partitioning), no join and no second scan of `counts`, so the
+    * state needs no cache. The group totals are constant within a key,
+    * which is why `max` reads them back exactly.
+    *
+    * Null keys: a key holding a null is a group of its own, as in
+    * `groupBy` (SURVEY §4). A null value counts towards `n` and sorts
+    * below every price in the order statistics; it adds nothing to Σx,
+    * Σx² or the median sum. */
   def statsFromCounts(counts: DataFrame, keys: Seq[String],
       value: String): DataFrame = {
     val k = keys.map(col)
-    val agg = counts.groupBy(k: _*)
-      .agg(sum(col("_c")).as("n"),
-        sum(col(value).cast("decimal(25,4)") * col("_c"))
-          .cast("double").as("sx"),
-        sum((col(value) * col(value)).cast("decimal(25,4)") * col("_c"))
-          .cast("double").as("sxx"))
-      .filter(col("n") >= 2)
-    val med = Fraud.groupMedianFromCounts(counts, keys, value, s"median_$value")
-    agg.join(med, keys)
+    val byKey = Window.partitionBy(k: _*)
+    val v = col(value)
+    // order statistic m falls in this value's cumulative range (_cum-_c, _cum]
+    def holds(m: Column): Column =
+      (m > col("_cum") - col("_c") && m <= col("_cum")).cast("int")
+    counts
+      .withColumn("_cum", sum(col("_c")).over(byKey.orderBy(v.asc)))
+      .withColumn("_n", sum(col("_c")).over(byKey))
+      .withColumn("_sx", sum(v.cast("decimal(25,4)") * col("_c")).over(byKey))
+      .withColumn("_sxx",
+        sum((v * v).cast("decimal(25,4)") * col("_c")).over(byKey))
+      .filter(col("_n") >= 2)
+      .withColumn("_w", holds(((col("_n") + 1) / 2).cast("long")) +
+        holds(((col("_n") + 2) / 2).cast("long")))
+      .filter(col("_w") > 0)
+      .groupBy(k: _*)
+      .agg(max(col("_n")).as("n"), max(col("_sx")).cast("double").as("sx"),
+        max(col("_sxx")).cast("double").as("sxx"),
+        (sum(v * col("_w")) / 2.0).as(s"median_$value"))
       .select(k ++ Seq(col("n"),
         (col("sx") / col("n")).as(s"mean_$value"),
         col(s"median_$value"),
@@ -153,8 +179,7 @@ object IncrementalStats {
     val keys = Seq("category", "cond")
     val halves = Seq(0, 1).map(par =>
       valueCounts(p.filter(pmod(col("p_partkey"), lit(2)) === par), keys, "price"))
-    val state = merge(halves).transform(graft.CacheRegistry.register)
-    statsFromCounts(state, keys, "price")
+    statsFromCounts(merge(halves), keys, "price")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -449,8 +449,8 @@ object RiskEngine {
   // routed segments → per-(category, condition) price stats with
   // nested per-component stats. Output is the flat-row form of the
   // reference's market_stats.json tree; StatsGenFidelitySpec replays a
-  // pinned corpus. One shuffle per aggregation level, all
-  // combiner-friendly.
+  // pinned corpus. Every level comes from one combiner-friendly
+  // value-counts aggregate and one keyed window pass.
   // =================================================================
 
   /** Routing per the reference's loop (regex_analyzer.py:929-953):
@@ -461,16 +461,15 @@ object RiskEngine {
     marketStatsOf(TextSpecs.withSpecs(items, col("title"), col("description")))
 
   /** [[generateMarketStats]] over a frame that already carries the
-    * `TextSpecs.withSpecs` columns. The one cache boundary here is
-    * after routing (inside aggregateStats), so only the slim (route,
-    * category, cond, price, cpu, ram, gpu) frame is materialized. A
-    * caller that also scores the same items caches `specced` itself
-    * (FraudPipeline.pipelineFrom) so extraction runs once. Uncached,
-    * extraction → routing is one plan whose heavy columns (the
-    * graft_specs struct, cond, segment) are named and multiply
-    * referenced, so CollapseProject keeps them staged and each runs
-    * once per row (PlanSpec pins one graft_specs per extraction
-    * plan). */
+    * `TextSpecs.withSpecs` columns. The stats are one plan that reads
+    * `specced` once: extraction and routing run once per row, and the
+    * plan caches nothing. A caller that also scores the same items
+    * caches `specced` itself (FraudPipeline.pipelineFrom), so
+    * extraction runs once across both passes. Uncached, extraction →
+    * routing is one plan whose heavy columns (the graft_specs struct,
+    * cond, segment) are named and multiply referenced, so
+    * CollapseProject keeps them staged and each runs once per row
+    * (PlanSpec pins one graft_specs per extraction plan). */
   def marketStatsOf(specced: DataFrame): DataFrame = {
     val s = specced.sparkSession
     aggregateStats(routeItems(specced),
@@ -512,94 +511,47 @@ object RiskEngine {
   }
 
   /** Stats aggregation over a routed frame (regex_analyzer.py:968-1022):
-    * per-(category, condition) price stats with min-support 2 + nested
-    * per-component stats + flat secondary-route stats. `pyR` is the
-    * output rounding (python-parity 2 dp in production; identity in the
-    * oracle face, where raw doubles compare exactly across engines). */
-  def aggregateStats(routed0: DataFrame, pyR: Column => Column): DataFrame = {
-    def sx(c: Column): Column = sum(c.cast("decimal(25,4)")).cast("double")
-    // shared clamped formula — see Fraud.stdevCols for the NaN hazard
-    def stdev(sxC: Column, sxxC: Column, n: Column): Column =
-      Fraud.stdevCols(sxC, sxxC, n)
-
-    // Cache boundary AFTER routing: the cond/segment/route columns are
-    // regex-heavy (condition + market-segment detection over the raw
-    // text), and the branches below scan the routed frame ~6 times
-    // (seg agg, seg median, comp agg, comp median, flat). Without this
-    // the regexes re-execute per scan — measured 4.7 s → 3.0 s for
-    // f13b and 10.9 s → 8.6 s for f13+f13b combined at sf0.1. Only the
-    // slim routing output is materialized.
-    val routed = routed0
-      .select(col("route"), col("category"), col("cond"), col("price"),
-        col("cpu"), col("ram"), col("gpu"))
-      .transform(graft.CacheRegistry.register)
-
-    val prime = routed.filter(col("route") === "PRIME")
-      .select(col("category"), col("cond"), col("price"),
-        col("cpu"), col("ram"), col("gpu"))
-
-    def statsOf(df: DataFrame, keys: Seq[String]): DataFrame = {
-      // ONE value-counts shuffle feeds BOTH the moments and the
-      // median (the old shape scanned `df` twice — once for the agg,
-      // once inside groupMedian). Decimal sums weighted by the count
-      // are exactly the row-level sums (integer-weighted exact
-      // arithmetic), so outputs are bit-identical.
-      // Cache lifetime: pins live until session end (or
-      // spark.catalog.clearCache()) — an eager materialize+unpersist
-      // variant measured +1.5-2 s per stats query at sf0.1 for no
-      // test-scale benefit; callers doing REPEATED generation in one
-      // long session should clear the cache between runs.
-      val counts = df.groupBy((keys.map(col) :+ col("price")): _*)
-        .agg(count(lit(1)).as("_c")).transform(graft.CacheRegistry.register)
-      val agg = counts.groupBy(keys.map(col): _*)
-        .agg(sum(col("_c")).as("count"),
-          sum(col("price").cast("decimal(25,4)") * col("_c"))
-            .cast("double").as("_sx"),
-          sum((col("price") * col("price")).cast("decimal(25,4)") * col("_c"))
-            .cast("double").as("_sxx"))
-        .filter(col("count") >= 2)
-      val med = Fraud.groupMedianFromCounts(counts, keys, "price", "_med")
-      agg.join(med, keys)
-        .select(keys.map(col) :+
-          pyR(col("_sx") / col("count")).as("mean") :+
-          pyR(col("_med")).as("median") :+
-          pyR(stdev(col("_sx"), col("_sxx"), col("count"))).as("stdev") :+
-          col("count"): _*)
-    }
-
-    val segRows = statsOf(prime, Seq("category", "cond"))
-      .select(col("category"), col("cond").as("condition"),
-        lit(null).cast("string").as("comp_type"),
-        lit(null).cast("string").as("comp_name"),
-        col("mean"), col("median"), col("stdev"), col("count"))
-
-    val compExploded = prime.select(col("category"), col("cond"), col("price"),
-        explode(filter(array(
-          struct(lit("cpu").as("t"), col("cpu").as("name")),
-          struct(lit("ram").as("t"), col("ram").as("name")),
-          struct(lit("gpu").as("t"), col("gpu").as("name"))),
-          x => x("name").isNotNull)).as("c"))
-      .select(col("category"), col("cond"),
-        col("c.t").as("comp_type"), col("c.name").as("comp_name"), col("price"))
-    val compRows = statsOf(compExploded,
-        Seq("category", "cond", "comp_type", "comp_name"))
-      .select(col("category"), col("cond").as("condition"),
-        col("comp_type"), col("comp_name"),
-        col("mean"), col("median"), col("stdev"), col("count"))
-
-    val flat = routed.filter(col("route") =!= "PRIME")
-      .groupBy(col("route"))
-      .agg(count(lit(1)).as("count"), sx(col("price")).as("_sx"))
-      .filter(col("count") > 3)
-      .select(col("route").as("category"),
-        lit(null).cast("string").as("condition"),
-        lit(null).cast("string").as("comp_type"),
-        lit(null).cast("string").as("comp_name"),
-        pyR(col("_sx") / col("count")).as("mean"),
-        lit(null).cast("double").as("median"),
-        lit(null).cast("double").as("stdev"), col("count"))
-
-    segRows.union(compRows).union(flat)
+    * per-(category, condition) price stats with min-support 2, nested
+    * per-component stats with min-support 2, and flat secondary-route
+    * stats (mean and count) with min-support 4. `pyR` is the output
+    * rounding (python-parity 2 dp in production; identity in the
+    * oracle face, where raw doubles compare exactly across engines).
+    *
+    * Every row is one stat key `(lvl, category, condition, comp_type,
+    * comp_name)`: a PRIME row yields its segment key (lvl 0) and one
+    * key per non-null cpu, ram and gpu (lvl 1); any other route yields
+    * its flat key (lvl 2). All levels come from ONE value-counts
+    * aggregate and one `IncrementalStats.statsFromCounts` pass, so the
+    * plan holds no cache, no join and no union. A PRIME row with a null
+    * category or condition has no stat key, and a row with a null
+    * route is no route at all. */
+  def aggregateStats(routed: DataFrame, pyR: Column => Column): DataFrame = {
+    val none = lit(null).cast("string")
+    def key(lvl: Int, category: Column, condition: Column, compType: Column,
+        compName: Column): Column =
+      struct(lit(lvl).as("lvl"), category.as("category"),
+        condition.as("condition"), compType.as("comp_type"),
+        compName.as("comp_name"))
+    val primeKeys = filter(
+      array(key(0, col("category"), col("cond"), none, none) +:
+        Seq("cpu", "ram", "gpu").map(t =>
+          key(1, col("category"), col("cond"), lit(t), col(t))): _*),
+      k => k("lvl") === 0 || k("comp_name").isNotNull)
+    val statKeys =
+      when(col("route") === "PRIME" && col("category").isNotNull &&
+          col("cond").isNotNull, primeKeys)
+        .when(col("route") =!= "PRIME", array(key(2, col("route"), none, none, none)))
+    val keys = Seq("lvl", "category", "condition", "comp_type", "comp_name")
+    val keyed = routed.select(explode(statKeys).as("k"), col("price"))
+      .select(col("k.*"), col("price"))
+    val full = col("lvl") < 2
+    IncrementalStats.statsFromCounts(
+        IncrementalStats.valueCounts(keyed, keys, "price"), keys, "price")
+      .filter(full || col("n") > 3)
+      .select(col("category"), col("condition"), col("comp_type"),
+        col("comp_name"), pyR(col("mean_price")).as("mean"),
+        when(full, pyR(col("median_price"))).as("median"),
+        when(full, pyR(col("stdev_price"))).as("stdev"), col("n").as("count"))
   }
 
   // =================================================================

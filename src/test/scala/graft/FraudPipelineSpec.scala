@@ -62,6 +62,13 @@ class FraudPipelineSpec extends SparkSpec {
     assert(spark.sharedState.cacheManager.isEmpty, "a cache outlived unpersistAll")
   }
 
+  test("fp01 pins one cache, its specced frame") {
+    graft.CacheRegistry.unpersistAll()
+    FraudPipeline.fp01(spark, sf("sf0.001")).collect()
+    try assert(graft.CacheRegistry.registeredCount == 1)
+    finally graft.CacheRegistry.unpersistAll()
+  }
+
   test("fp02: the enriched subchain is exactly the f05 alert set, " +
       "and the enrichment columns agree with f03/f01") {
     val dir = sf("sf0.001")

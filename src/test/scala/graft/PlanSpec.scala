@@ -323,6 +323,57 @@ class PlanSpec extends SparkSpec {
     } finally CacheRegistry.unpersistAll()
   }
 
+  /** Market stats planned over a cached, materialized specced frame
+    * of f12's items. */
+  private def statsOverCachedSpecs(): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val specced = graft.functions.TextSpecs.withSpecs(
+        operators.RiskEngine.f12Items(spark, sf()), col("title"), col("description"))
+      .transform(CacheRegistry.register)
+    specced.count()
+    operators.RiskEngine.marketStatsOf(specced)
+  }
+
+  test("market stats over a cached specced frame: one plan, no cache, no join, at most two exchanges") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    try {
+      val stats = statsOverCachedSpecs()
+      val opt = stats.queryExecution.optimizedPlan
+      val cached = opt.collect { case r: InMemoryRelation => r }.size
+      assert(cached == 1, s"stats plan reads $cached cached relations, want its input only")
+      val joins = opt.collect { case j: Join => j }.size
+      assert(joins == 0, s"stats plan holds $joins joins")
+      val helper = new AdaptiveSparkPlanHelper {}
+      val shuffles = helper.collect(stats.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec => e
+      }.size
+      assert(shuffles <= 2, s"stats plan shuffles $shuffles times")
+    } finally CacheRegistry.unpersistAll()
+  }
+
+  test("market stats over a cached specced frame collect in at most five jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    try {
+      val stats = statsOverCachedSpecs()
+      org.apache.spark.GraftTestBus.drain(sc)
+      sc.addSparkListener(l)
+      assert(stats.collect().nonEmpty)
+      org.apache.spark.GraftTestBus.drain(sc)
+      assert(jobs.get <= 5, s"market stats ran ${jobs.get} jobs")
+    } finally {
+      sc.removeSparkListener(l)
+      CacheRegistry.unpersistAll()
+    }
+  }
+
   test("f12 plans spec extraction once") {
     // scoreItems/scoreItemsWith/f12 share one extraction → scoring
     // path: its four broadcast lookup joins must read ONE cached

@@ -95,6 +95,69 @@ class PropertySpec extends SparkSpec {
     assert(got == expected)
   }
 
+  test("one-plan aggregateStats equals the three-branch StagedStats") {
+    // routed frames covering every branch of the stats contract: odd
+    // and even groups with duplicate prices, support-1 groups (dropped),
+    // flat routes of exactly 3 (dropped) and 4 rows (kept), null
+    // components, keys and prices, zero-variance groups (the stdev
+    // clamp) and prices that round in decimal(25,4)
+    import graft.operators.{RiskEngine, StagedStats}
+    val rnd = new Random(41)
+    def pick[T](xs: Seq[T]): T = xs(rnd.nextInt(xs.size))
+    val pool = Seq(Some(100.0), Some(100.0), Some(250.5), Some(19.99995),
+      Some(0.00005), Some(2.71828), Some(1234.56785), Some(0.1), None)
+    val random = (1 to 400).map { _ =>
+      val route = pick(Seq("PRIME", "PRIME", "PRIME", "UNCERTAIN", null))
+      (route, pick(Seq("GAMING", "APPLE", "WORKSTATION", null)),
+        pick(Seq("NEW", "USED", "LIKE_NEW", null)),
+        if (rnd.nextBoolean()) pick(pool) else Some(rnd.nextInt(200000) / 100.0),
+        pick(Seq("INTEL I7", "APPLE M1", null)), pick(Seq("16GB", "8GB", null)),
+        pick(Seq("NVIDIA RTX 3060", null, null)))
+    }
+    val planted =
+      Seq[(String, String, String, Option[Double], String, String, String)](
+        ("PRIME", "SOLO", "NEW", Some(10.0), "INTEL I5", null, null)) ++
+      Seq.fill(5)(("PRIME", "ZERO", "USED", Some(0.1), "INTEL I3", "4GB", null)) ++
+      Seq.fill(3)(("PRIME", "ZERO", "NEW", Some(33.33), null, "4GB", null)) ++
+      Seq(1.5, 2.5, 2.5, 9.0).map(p =>
+        ("PRIME", "EVEN", "NEW", Some(p), "INTEL I5", null, "GTX 1650")) ++
+      Seq.fill(3)(("BROKEN", "GAMING", "USED", Some(40.0), null, null, null)) ++
+      Seq(Some(5.0), Some(5.0), None, Some(19.99995)).map(p =>
+        ("ACCESSORY", null, null, p, null, null, null))
+    val routed = (random ++ planted)
+      .toDF("route", "category", "cond", "price", "cpu", "ram", "gpu")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
+    Seq[(String, org.apache.spark.sql.Column => org.apache.spark.sql.Column)](
+        "pyRound" -> (c => graft.plans.GraftFunctions.pyRound(spark, c, 2)),
+        "identity" -> identity).foreach { case (name, pyR) =>
+      val got = RiskEngine.aggregateStats(routed, pyR)
+      val want = StagedStats.aggregateStats(routed, pyR)
+      assert(got.schema.map(f => (f.name, f.dataType)) ==
+        want.schema.map(f => (f.name, f.dataType)), name)
+      val (g, w) = (rows(got), rows(want))
+      assert(g == w, s"$name: one-plan stats differ from the staged branches")
+      // the planted cases are live: support-1 and 3-row flat groups
+      // drop, the 4-row flat route stays, zero variance is a number
+      // near 0 (never NaN)
+      val cats = g.map(_.head)
+      assert(!cats.contains("SOLO") && !cats.contains("BROKEN") &&
+        cats.contains("ACCESSORY") && cats.contains("EVEN"), name)
+      val zero = g.filter(_.head == "ZERO").map(_(6).asInstanceOf[Double])
+      assert(zero.size == 5 && zero.forall(sd => sd >= 0 && sd < 1e-3), s"$name: $zero")
+    }
+  }
+
+  test("statsFromCounts keeps a null-key group, as groupBy does") {
+    import graft.operators.IncrementalStats
+    val df = Seq[(String, Double)](("a", 1.0), ("a", 3.0), (null, 2.0),
+      (null, 4.0), (null, 9.0)).toDF("k", "v")
+    val got = IncrementalStats.statsFromCounts(
+        IncrementalStats.valueCounts(df, Seq("k"), "v"), Seq("k"), "v")
+      .select("k", "n", "median_v").as[(String, Long, Double)].collect().toSet
+    assert(got == Set(("a", 2L, 2.0), (null, 3L, 4.0)))
+  }
+
   test("geohash at lower precision is a prefix of higher precision") {
     val rnd = new Random(13)
     val pts = (1 to 200).map(_ =>

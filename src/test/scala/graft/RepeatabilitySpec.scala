@@ -8,12 +8,13 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   * times: no memo, persisted census or shared artifact lets the
   * second run skip a probe the first one paid. The faces here are the
   * ones whose probes (gear census, hub gate, link-predict stats,
-  * catalog count) or graph mart such state once served. */
+  * catalog count) or graph mart such state once served, plus the
+  * fraud pipeline and the stats generation it runs. */
 class RepeatabilitySpec extends SparkSpec {
 
   private val faces = Seq("d02_ngram_jaccard_auto", "c23_cluster_split",
     "g04_triangles", "g04_triangles_staged", "g05_link_predict",
-    "q20_copurchase")
+    "q20_copurchase", "fp01_fraud_pipeline", "f13_generate_stats")
 
   /** Jobs, stages and tasks of one evaluation. */
   private case class Work(jobs: Int, stages: Int, tasks: Int)
